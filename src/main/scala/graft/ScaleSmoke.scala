@@ -100,9 +100,10 @@ object ScaleSmoke {
       s"(checksum $skewedChecksum)")
 
     // ---- skew MITIGATED: same ensemble through ChunkedDetect — only the
-    // hot series (minRowsToChunk gate, sampled) is cut into time-bucket
-    // chunks with boundary-margin context copied by stateless per-row
-    // routing; cold series keep their plain window inside the same job.
+    // hot series (minRowsToChunk gate, an exact count from the one
+    // census action) is cut into time-bucket chunks with boundary-margin
+    // context copied by stateless per-row routing; cold series keep
+    // their plain window inside the same job.
     // Sizing is for the HOT cadence alone (one row per 10 s): 2M s
     // buckets put ~200k rows in each hot chunk (≈50-way parallel), 20k s
     // margins hold 2000 rows ≫ the ensemble's contextRows = 5, and

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline._
+import graft.util.Parquet
 
 /** Dedup-pipeline scale smoke: synthetic corpora far beyond the driver
   * tables (default 200k docs ≈ 40× sf0.1), generated distributively with
@@ -145,7 +146,7 @@ object ScaleSmokeDocs {
       stage("index_delete") {
         Dedup.deleteFromExactIndex(docs.filter(col("doc_id") % 7 === 0),
           s"$dir/idx", s"$dir/idx_del", "doc_id", "text")
-        spark.read.parquet(s"$dir/idx_del/index").count()
+        Parquet.read(spark, s"$dir/idx_del/index").count()
       }
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -221,7 +222,7 @@ object ScaleSmokeDocs {
       println(f"[docs-scale] n=$n exact_index_build2     ${(System.nanoTime() - tIdx) / 1e9}%8.2fs")
       stage("index_compact") {
         Dedup.compactExactIndex(spark, s"$dir/idx", s"$dir/idx_c")
-        spark.read.parquet(s"$dir/idx_c/index").count()
+        Parquet.read(spark, s"$dir/idx_c/index").count()
       }
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -930,7 +931,7 @@ object ScaleSmokeDocs {
       stage("mh_index_build")({
         Dedup.saveMinhashIndex(
           Dedup.minhashIndex(docs, "doc_id", "text", 3, 32, 8), idxDir, 3)
-        spark.read.parquet(s"$idxDir/index").count()
+        Parquet.read(spark, s"$idxDir/index").count()
       })
       stage("incremental_screen_20k")(
         Dedup.nearDupAgainstIndex(batch, idxDir, "doc_id", "text", 0.4)
@@ -963,7 +964,7 @@ object ScaleSmokeDocs {
       val exDir = s"/tmp/graft_ex_idx_$totalDocs"
       stage("exact_index_build")({
         Dedup.saveExactIndex(docs, "doc_id", "text", exDir)
-        spark.read.parquet(s"$exDir/index").count()
+        Parquet.read(spark, s"$exDir/index").count()
       })
       val exHits = stage("exact_screen_20k")(
         Dedup.exactAgainstIndex(batch, exDir, "doc_id", "text")
@@ -1001,7 +1002,7 @@ object ScaleSmokeDocs {
       val lnDir = s"/tmp/graft_ln_idx_$totalDocs"
       stage("line_index_build")({
         Dedup.saveLineIndex(docs, "doc_id", "text", lnDir)
-        spark.read.parquet(s"$lnDir/index").count()
+        Parquet.read(spark, s"$lnDir/index").count()
       })
       stage("line_screen_20k")(
         Dedup.linesAgainstIndex(batch, lnDir, "doc_id", "text").count())
@@ -1080,7 +1081,7 @@ object ScaleSmokeDocs {
         Dedup.saveMinhashIndexBucketed(
           Dedup.minhashIndex(docs, "doc_id", "text", 3, 32, 8), idxDirB, 3,
           nBuckets = 32, tablePrefix = s"smoke_mh_$totalDocs")
-        spark.read.parquet(s"$idxDirB/index").count()
+        Parquet.read(spark, s"$idxDirB/index").count()
       })
       stage("backfill_screen_632k")(
         Dedup.nearDupAgainstIndexBucketed(batch, idxDirB, "doc_id", "text",
@@ -1134,7 +1135,7 @@ object ScaleSmokeDocs {
       val sigDir = s"/tmp/graft_sig_idx_$totalDocs"
       stage("sig_index_build")({
         Dedup.saveSignatureIndex(sigs, sigDir, "doc_id", "sig", maxHamming = 2)
-        spark.read.parquet(s"$sigDir/sigs").count()
+        Parquet.read(spark, s"$sigDir/sigs").count()
       })
       stage("hamming_screen_20k")(
         Dedup.hammingAgainstIndex(batchSigs, sigDir, "doc_id", "sig").count())
@@ -1147,7 +1148,7 @@ object ScaleSmokeDocs {
       stage("sig_index_build_wide")({
         Dedup.saveSignatureIndex(sigs, sigDirW, "doc_id", "sig",
           maxHamming = 2, nBlocks = 6)
-        spark.read.parquet(s"$sigDirW/sigs").count()
+        Parquet.read(spark, s"$sigDirW/sigs").count()
       })
       stage("hamming_screen_20k_wide")(
         Dedup.hammingAgainstIndex(batchSigs, sigDirW, "doc_id", "sig").count())
@@ -1283,7 +1284,7 @@ object ScaleSmokeDocs {
       vstage("cos_index_build")({
         Similarity.saveCosineIndex(vecs, cosIdxDir,
           tables = 8, planesPerTable = planesB, dim = 64)
-        spark.read.parquet(s"$cosIdxDir/vectors").count()
+        Parquet.read(spark, s"$cosIdxDir/vectors").count()
       })
       vstage("cosine_screen_20k")(
         Similarity.cosineNearDupAgainstIndex(batch, cosIdxDir, 0.98).count())

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import graft.util.Parquet
 
 /** Loaders for the driver-generated parquet star schema
   * (see /root/repo/TESTDATA.md). All queries take a `dir` like
@@ -27,7 +28,7 @@ object Tables {
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Parquet.read(spark, s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType match {
         case LongType if f.name == "ts" =>

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Parquet
 
 /** Persistence for ANN indexes. At corpus scale the index IS the
   * artifact — PQ codes / IVF assignments are built once and served for
@@ -31,7 +32,7 @@ object AnnIO {
     * them; [[Similarity.pqTopK]] takes them unchanged.
     */
   def loadPqIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/codebook"), spark.read.parquet(s"$path/codes"))
+    (Parquet.read(spark, s"$path/codebook"), Parquet.read(spark, s"$path/codes"))
 
   /** Persist an IVF index: centroids + the indexed corpus partitioned
     * by inverted list.
@@ -56,7 +57,7 @@ object AnnIO {
     * fail loudly instead.
     */
   def loadIvfIndex(spark: SparkSession, path: String): (Array[Array[Double]], DataFrame) = {
-    val rows = spark.read.parquet(s"$path/centroids")
+    val rows = Parquet.read(spark, s"$path/centroids")
       .select(col("list").cast("int"), col("centroid"))
       .collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
@@ -65,7 +66,7 @@ object AnnIO {
       s"loadIvfIndex: centroid list ids must be dense 0..${rows.length - 1}, " +
         s"got [${ids.take(5).mkString(",")}...] at $path")
     val byId = rows.toMap
-    ((0 until rows.length).map(byId).toArray, spark.read.parquet(s"$path/corpus"))
+    ((0 until rows.length).map(byId).toArray, Parquet.read(spark, s"$path/corpus"))
   }
 
   /** Persist an IVF-PQ index ([[Similarity.ivfPqIndex]]'s three
@@ -98,7 +99,7 @@ object AnnIO {
       .write.mode("overwrite").parquet(s"$path/truth")
 
   def loadTruth(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/truth")
+    Parquet.read(spark, s"$path/truth")
 
   /** Returns (centroids, codebook, codesWithList) for
     * [[Similarity.ivfPqTopK]]; same by-name/dense-id discipline as
@@ -106,7 +107,7 @@ object AnnIO {
     */
   def loadIvfPqIndex(spark: SparkSession, path: String)
       : (Array[Array[Double]], DataFrame, DataFrame) = {
-    val rows = spark.read.parquet(s"$path/centroids")
+    val rows = Parquet.read(spark, s"$path/centroids")
       .select(col("list").cast("int"), col("centroid"))
       .collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
@@ -115,7 +116,7 @@ object AnnIO {
       s"loadIvfPqIndex: centroid list ids must be dense 0..${rows.length - 1} at $path")
     val byId = rows.toMap
     ((0 until rows.length).map(byId).toArray,
-      spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/codes"))
+      Parquet.read(spark, s"$path/codebook"),
+      Parquet.read(spark, s"$path/codes"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import TextOps._
 import graft.pipeline.CacheLedger.TrackedPersist
+import graft.util.Parquet
 
 /** Deduplication operators for training-data pipelines, smallest to
   * largest hammer:
@@ -259,11 +260,11 @@ object Dedup {
         "would silently miss every shared region")),
       Seq("hash_len", "min_len", "max_len", "mask_bits", "start_bits"))
     val hashLen = m.int("hash_len")
-    val idx = spark.read.parquet(s"$path/index")
+    val idx = Parquet.read(spark, s"$path/index")
     require(Seq("chunk_hash", "first", "cnt").forall(idx.columns.contains),
       s"loadChunkIndex: not a chunk index at $path: ${idx.columns.mkString(",")}")
     probeEach(spark, s"$path/index") { f =>
-      val r = spark.read.parquet(f)
+      val r = Parquet.read(spark, f)
         .select(length(col("chunk_hash")),
           col("chunk_hash").rlike("^[0-9a-f]+$")).limit(1).collect()
       r.headOption.foreach { row =>
@@ -620,12 +621,12 @@ object Dedup {
         "would silently miss every duplicate")),
       Seq("hash_len", "max_priority", "id_bits"))
     val hashLen = m.int("hash_len")
-    val idx = spark.read.parquet(s"$path/index")
+    val idx = Parquet.read(spark, s"$path/index")
     require(Seq("content_hash", "win", "dup_cnt", "prio_mask")
         .forall(idx.columns.contains),
       s"loadPriorityIndex: not a priority index at $path: ${idx.columns.mkString(",")}")
     probeEach(spark, s"$path/index") { f =>
-      val r = spark.read.parquet(f)
+      val r = Parquet.read(spark, f)
         .select(length(col("content_hash")),
           col("content_hash").rlike("^[0-9a-f]+$")).limit(1).collect()
       r.headOption.foreach { row =>
@@ -982,12 +983,12 @@ object Dedup {
         "silently miss every duplicate")),
       Seq("hash_len"))
     val hashLen = m.int("hash_len")
-    val idx = spark.read.parquet(s"$path/index")
+    val idx = Parquet.read(spark, s"$path/index")
     require(Seq("content_hash", "keep_id", "dup_cnt")
         .forall(idx.columns.contains),
       s"loadExactIndex: not an exact index at $path: ${idx.columns.mkString(",")}")
     probeEach(spark, s"$path/index") { f =>
-      val r = spark.read.parquet(f)
+      val r = Parquet.read(spark, f)
         .select(length(col("content_hash")),
           col("content_hash").rlike("^[0-9a-f]+$")).limit(1).collect()
       r.headOption.foreach { row =>
@@ -1389,16 +1390,16 @@ object Dedup {
         "matching batch fingerprints")),
       Seq("key_bits", "k", "w", "max_df"))
     val bits = m.int("key_bits")
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = Parquet.read(spark, s"$path/postings")
     require(Seq("fp", "doc").forall(postings.columns.contains),
       s"loadWinnowIndex: not a postings relation at $path: " +
         postings.columns.mkString(","))
-    val sizes = spark.read.parquet(s"$path/docs")
+    val sizes = Parquet.read(spark, s"$path/docs")
     require(Seq("doc", "n_fp").forall(sizes.columns.contains),
       s"loadWinnowIndex: not a doc-size relation at $path: " +
         sizes.columns.mkString(","))
     probeEach(spark, s"$path/postings") { f =>
-      val r = spark.read.parquet(f).select(col("fp").cast("long"))
+      val r = Parquet.read(spark, f).select(col("fp").cast("long"))
         .limit(1).collect()
       r.headOption.foreach { row =>
         val key = row.getLong(0)
@@ -1557,7 +1558,7 @@ object Dedup {
       expectedItems: Long, fpp: Double = 0.01): Unit = {
     loadWinnowIndex(spark, indexPath) // family/meta/probe validation
     writeBloomSidecar(indexPath, s"$indexPath/postings",
-      spark.read.parquet(s"$indexPath/postings")
+      Parquet.read(spark, s"$indexPath/postings")
         .select(col("fp").cast("long").as("k")),
       "winnow_fp60", expectedItems, fpp)
   }
@@ -1806,16 +1807,16 @@ object Dedup {
         "stop matching batch variants")),
       Seq("key_bits", "max_edits", "len_cap"))
     val bits = m.int("key_bits")
-    val titles = spark.read.parquet(s"$path/titles")
+    val titles = Parquet.read(spark, s"$path/titles")
     require(Seq("doc", "title").forall(titles.columns.contains),
       s"loadEditDistIndex: not a titles relation at $path: " +
         titles.columns.mkString(","))
-    val variants = spark.read.parquet(s"$path/variants")
+    val variants = Parquet.read(spark, s"$path/variants")
     require(Seq("vh", "doc").forall(variants.columns.contains),
       s"loadEditDistIndex: not a variants relation at $path: " +
         variants.columns.mkString(","))
     probeEach(spark, s"$path/variants") { f =>
-      val r = spark.read.parquet(f).select(col("vh").cast("long"))
+      val r = Parquet.read(spark, f).select(col("vh").cast("long"))
         .limit(1).collect()
       r.headOption.foreach { row =>
         val key = row.getLong(0)
@@ -1889,7 +1890,7 @@ object Dedup {
       expectedItems: Long, fpp: Double = 0.01): Unit = {
     loadEditDistIndex(spark, indexPath) // family/meta/probe validation
     writeBloomSidecar(indexPath, s"$indexPath/variants",
-      spark.read.parquet(s"$indexPath/variants")
+      Parquet.read(spark, s"$indexPath/variants")
         .select(col("vh").cast("long").as("k")),
       "editdist_vh60", expectedItems, fpp)
   }
@@ -2118,7 +2119,7 @@ object Dedup {
     val metaP = new org.apache.hadoop.fs.Path(s"$indexPath/bloom/meta")
     require(fs.exists(metaP),
       s"no bloom sidecar at $indexPath/bloom — run $builder first")
-    val metaDf = spark.read.parquet(s"$indexPath/bloom/meta")
+    val metaDf = Parquet.read(spark, s"$indexPath/bloom/meta")
     require(metaDf.columns.contains("family"),
       s"bloom sidecar at $indexPath/bloom predates the family tag — " +
         s"re-run $builder to rebuild it")
@@ -2471,16 +2472,16 @@ object Dedup {
         "matching batch shingles")),
       Seq("key_bits", "n", "max_df"))
     val bits = m.int("key_bits")
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = Parquet.read(spark, s"$path/postings")
     require(Seq("sg", "doc").forall(postings.columns.contains),
       s"loadShingleIndex: not a postings relation at $path: " +
         postings.columns.mkString(","))
-    val sizes = spark.read.parquet(s"$path/docs")
+    val sizes = Parquet.read(spark, s"$path/docs")
     require(Seq("doc", "n_sh").forall(sizes.columns.contains),
       s"loadShingleIndex: not a doc-size relation at $path: " +
         sizes.columns.mkString(","))
     probeEach(spark, s"$path/postings") { f =>
-      val r = spark.read.parquet(f).select(col("sg").cast("long"))
+      val r = Parquet.read(spark, f).select(col("sg").cast("long"))
         .limit(1).collect()
       r.headOption.foreach { row =>
         val k = row.getLong(0)
@@ -3246,7 +3247,7 @@ object Dedup {
     val m = readIndexMeta(spark, path, "loadMinhashIndex", None,
       Seq("n", "k", "bands"))
     val (n, k, bands) = (m.int("n"), m.int("k"), m.int("bands"))
-    val idx = spark.read.parquet(s"$path/index")
+    val idx = Parquet.read(spark, s"$path/index")
     val need = Seq("doc", "sh", "sig", "bb")
     require(need.forall(idx.columns.contains),
       s"loadMinhashIndex: not a minhash index at $path: ${idx.columns.mkString(",")}")
@@ -3260,7 +3261,7 @@ object Dedup {
     // never O(corpus). Within-file drift remains
     // [[validateMinhashIndex]]'s full-audit job.
     probeEach(spark, s"$path/index") { f =>
-      val r = spark.read.parquet(f)
+      val r = Parquet.read(spark, f)
         .select(size(col("sig")), size(col("bb"))).limit(1).collect()
       r.headOption.foreach { row =>
         require(row.getInt(0) == k && row.getInt(1) == bands,
@@ -3301,7 +3302,7 @@ object Dedup {
   private[pipeline] def readIndexMeta(spark: SparkSession, path: String,
       loader: String, family: Option[(String, String)],
       geometry: Seq[String], optional: Seq[String] = Nil): IndexMeta = {
-    val metaDf = spark.read.parquet(s"$path/meta")
+    val metaDf = Parquet.read(spark, s"$path/meta")
     val cols = metaDf.columns.toSeq // driver-side schema — no job
     if (family.isDefined)
       require(cols.contains("family"),
@@ -3420,8 +3421,8 @@ object Dedup {
   private def storedBandCells(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$path/bands")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/bands")
-    else explodeBands(spark.read.parquet(s"$path/index"))
+    if (fs.exists(p)) Parquet.read(spark, s"$path/bands")
+    else explodeBands(Parquet.read(spark, s"$path/index"))
   }
 
   /** [[deleteFromExactIndex]] for the PER-DOC near-dup index
@@ -3770,11 +3771,11 @@ object Dedup {
         "matching batch lines")),
       Seq("key_bits"))
     val bits = m.int("key_bits")
-    val idx = spark.read.parquet(s"$path/index")
+    val idx = Parquet.read(spark, s"$path/index")
     require(Seq("lk", "doc", "pos", "cnt").forall(idx.columns.contains),
       s"loadLineIndex: not a line index at $path: ${idx.columns.mkString(",")}")
     probeEach(spark, s"$path/index") { f =>
-      val r = spark.read.parquet(f).select(col("lk").cast("long"))
+      val r = Parquet.read(spark, f).select(col("lk").cast("long"))
         .limit(1).collect()
       r.headOption.foreach { row =>
         val k = row.getLong(0)
@@ -4846,8 +4847,8 @@ object Dedup {
       path: String): ((Int, Int, DataFrame, DataFrame), IndexMeta) = {
     val im = readIndexMeta(spark, path, "loadSignatureIndex", None,
       Seq("max_hamming"), optional = Seq("n_blocks"))
-    val sigs = spark.read.parquet(s"$path/sigs")
-    val bands = spark.read.parquet(s"$path/bands")
+    val sigs = Parquet.read(spark, s"$path/sigs")
+    val bands = Parquet.read(spark, s"$path/bands")
     require(Seq("doc", "sh").forall(sigs.columns.contains) &&
       Seq("doc", "band", "bits").forall(bands.columns.contains),
       s"loadSignatureIndex: not a signature index at $path")
@@ -4865,7 +4866,7 @@ object Dedup {
       (b.toLong, blocks.map(_._2).sum)
     }.toMap
     probeEach(spark, s"$path/bands") { f =>
-      val r = spark.read.parquet(f)
+      val r = Parquet.read(spark, f)
         .select(col("band").cast("long"), col("bits").cast("long"))
         .limit(1).collect()
       r.headOption.foreach { row =>
@@ -4946,7 +4947,7 @@ object Dedup {
       expectedItems: Long, fpp: Double = 0.01): Unit = {
     loadSignatureIndex(spark, indexPath) // geometry/meta/probe validation
     writeBloomSidecar(indexPath, s"$indexPath/bands",
-      spark.read.parquet(s"$indexPath/bands")
+      Parquet.read(spark, s"$indexPath/bands")
         .select(xxhash64(col("band"), col("bits")).as("k")),
       "signature_band_xxh64", expectedItems, fpp)
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Parquet
 
 /** Training-shard materialization: the last step of a data pipeline —
   * write the curated corpus as `nShards` size-balanced, individually
@@ -39,5 +40,5 @@ object Sharding {
 
   /** Read one shard back (partition-pruned: touches only `shard=K/`). */
   def readShard(spark: SparkSession, path: String, shard: Int): DataFrame =
-    spark.read.parquet(path).filter(col("shard") === shard)
+    Parquet.read(spark, path).filter(col("shard") === shard)
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.pipeline.CacheLedger.TrackedPersist
+import graft.util.Parquet
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and an LSH
@@ -1337,8 +1338,8 @@ object Similarity {
       : ((Int, Int, Int, DataFrame, DataFrame), Dedup.IndexMeta) = {
     val im = Dedup.readIndexMeta(spark, path, "loadCosineIndex", None,
       Seq("tables", "planes_per_table", "dim"))
-    val vectors = spark.read.parquet(s"$path/vectors")
-    val bands = spark.read.parquet(s"$path/bands")
+    val vectors = Parquet.read(spark, s"$path/vectors")
+    val bands = Parquet.read(spark, s"$path/bands")
     require(Seq("id", "v", "nrm").forall(vectors.columns.contains) &&
       Seq("id", "band", "bucket").forall(bands.columns.contains),
       s"loadCosineIndex: not a cosine index at $path")
@@ -1351,7 +1352,7 @@ object Similarity {
     // file: vector length must equal the meta dim, and band cells must
     // come from THIS (tables, planesPerTable) family.
     Dedup.probeEach(spark, s"$path/vectors") { f =>
-      val r = spark.read.parquet(f).select(size(col("v"))).limit(1).collect()
+      val r = Parquet.read(spark, f).select(size(col("v"))).limit(1).collect()
       r.headOption.foreach { row =>
         require(row.getInt(0) == dim,
           s"loadCosineIndex: file $f has dim=${row.getInt(0)} but meta " +
@@ -1360,7 +1361,7 @@ object Similarity {
       }
     }
     Dedup.probeEach(spark, s"$path/bands") { f =>
-      val r = spark.read.parquet(f)
+      val r = Parquet.read(spark, f)
         .select(col("band").cast("long"), col("bucket").cast("long"))
         .limit(1).collect()
       r.headOption.foreach { row =>
@@ -1472,7 +1473,7 @@ object Similarity {
       indexPath: String, expectedItems: Long, fpp: Double = 0.01): Unit = {
     loadCosineIndex(spark, indexPath) // meta/probe validation
     Dedup.writeBloomSidecar(indexPath, s"$indexPath/bands",
-      spark.read.parquet(s"$indexPath/bands")
+      Parquet.read(spark, s"$indexPath/bands")
         .select(xxhash64(col("band"), col("bucket")).as("k")),
       "cosine_band_xxh64", expectedItems, fpp)
   }

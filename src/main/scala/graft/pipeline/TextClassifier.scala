@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Parquet
 
 /** The generic hashed char-3-gram LINEAR text classifier core
   * (Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -256,7 +257,7 @@ object TextClassifier {
   /** Load weights saved by [[saveWeights]], validating the envelope. */
   def loadWeights(spark: SparkSession, path: String, classes: Seq[String],
       b: Int, fast: Boolean): IndexedSeq[IndexedSeq[Long]] = {
-    val meta = spark.read.parquet(s"$path/meta")
+    val meta = Parquet.read(spark, s"$path/meta")
       .select(col("classes").cast("string"), col("b").cast("int"),
         col("family").cast("string")).collect()
     require(meta.length == 1, s"loadWeights: expected ONE meta row at $path")
@@ -265,7 +266,7 @@ object TextClassifier {
     require(got == want,
       s"loadWeights: stored envelope $got at $path does not match the " +
         s"serving envelope $want — scores would be silently wrong")
-    val rows = spark.read.parquet(s"$path/weights")
+    val rows = Parquet.read(spark, s"$path/weights")
       .select(col("class_idx").cast("int"), col("bucket").cast("int"),
         col("w").cast("long")).collect()
     require(rows.length == classes.size * b,

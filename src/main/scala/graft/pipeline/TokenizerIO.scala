@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Parquet
 
 /** Persistence for trained tokenizers — the [[AnnIO]] philosophy: at
   * corpus scale the trained artifact outlives any session (a merge
@@ -28,7 +29,7 @@ object TokenizerIO {
   }
 
   def loadBpe(spark: SparkSession, path: String): Seq[(Int, String, String, Long)] = {
-    val rows = spark.read.parquet(s"$path/merges")
+    val rows = Parquet.read(spark, s"$path/merges")
       .select(col("rank").cast("int"), col("left"), col("right"),
         col("pair_count").cast("long"))
       .orderBy("rank")
@@ -59,13 +60,13 @@ object TokenizerIO {
   }
 
   def loadWordPiece(spark: SparkSession, path: String): (Seq[String], String) = {
-    val pieces = spark.read.parquet(s"$path/vocab")
+    val pieces = Parquet.read(spark, s"$path/vocab")
       .select(col("piece")).orderBy("piece")
       .collect().map(_.getString(0)).toSeq
     require(pieces.nonEmpty, "wordpiece vocab corrupt: no pieces")
     require(pieces.distinct.length == pieces.length,
       "wordpiece vocab corrupt: duplicate pieces")
-    val meta = spark.read.parquet(s"$path/meta")
+    val meta = Parquet.read(spark, s"$path/meta")
       .select(col("unk_token").cast("string")).collect()
     require(meta.length == 1,
       s"wordpiece vocab corrupt: ${meta.length} meta rows (want 1)")
@@ -343,7 +344,7 @@ object TokenizerIO {
   }
 
   def loadUnigram(spark: SparkSession, path: String): Unigram.Model = {
-    val pieces = spark.read.parquet(s"$path/pieces")
+    val pieces = Parquet.read(spark, s"$path/pieces")
       .select(col("piece"), col("cost_micro").cast("long"))
       .orderBy("piece")
       .collect()
@@ -352,7 +353,7 @@ object TokenizerIO {
     require(pieces.nonEmpty, "unigram model corrupt: no pieces")
     require(pieces.map(_._1).distinct.length == pieces.length,
       "unigram model corrupt: duplicate pieces")
-    val meta = spark.read.parquet(s"$path/meta")
+    val meta = Parquet.read(spark, s"$path/meta")
       .select(col("unk_cost_micro").cast("long"), col("max_piece_len").cast("int"))
       .collect()
     require(meta.length == 1,

@@ -83,8 +83,9 @@ object DetectorQueries {
     // the same ensemble through the skew-mitigated chunked evaluator —
     // the driver holds it to the IDENTICAL oracle as det_combined, so
     // chunk-boundary frame relay, positional edge rules, and the
-    // validation fallback (random event cadence makes some chunks thin
-    // ⇒ both the chunked and fallback paths execute) are all hash-pinned
+    // validation census (random event cadence makes some chunks thin
+    // ⇒ chunked and unchunked series share the one window job) are all
+    // hash-pinned
     "det_combined_chunked" -> ((s, dir) =>
       out(ChunkedDetect.detect(CombinedDetector(Seq(
         RangeDetector(5.0, 175.0),

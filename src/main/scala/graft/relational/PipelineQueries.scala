@@ -6,6 +6,7 @@ import graft.Tables
 import graft.pipeline._
 import graft.pipeline.CacheLedger.TrackedPersist
 import graft.pipeline.TextOps._
+import graft.util.Parquet
 
 /** Training-data pipeline operators exposed as driver-verifiable queries
   * over `documents` / `embeddings`. Every hash is md5-derived so the
@@ -2491,7 +2492,7 @@ object PipelineQueries {
           maxDepth = 8)
           .write.mode("overwrite").parquet(s"$stage/flat")
       }
-      s.read.parquet(s"$out/flat")
+      Parquet.read(s, s"$out/flat")
         .select(col("leaf_id"), col("root_id"), col("depth"),
           array_join(zip_with(col("roles"), col("contents"),
             (r, c) => concat(r, lit(": "), c)), "\n").as("convo"))

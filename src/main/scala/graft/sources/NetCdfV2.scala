@@ -236,8 +236,10 @@ private[sources] object NetCdfV2 {
       val statuses =
         if (fs.isDirectory(hp)) fs.listStatus(hp).toSeq
           .filter(_.getPath.getName.endsWith(".nc"))
-        else fs.globStatus(hp).toSeq
-      require(statuses != null && statuses.nonEmpty, s"no netcdf files at $p")
+        // globStatus returns null, not an empty array, for a missing
+        // path without glob characters
+        else Option(fs.globStatus(hp)).toSeq.flatten
+      require(statuses.nonEmpty, s"no netcdf files at $p")
       // sorted so schema inference (first file wins) is deterministic —
       // FileSystem.listStatus order is filesystem-dependent
       statuses.map(_.getPath.toString).sorted

@@ -1,9 +1,10 @@
 package graft.ts
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Skew-mitigated detector evaluation: split hot series into time-bucket
   * CHUNKS and run the detector with `(seriesId, chunk)` as the window
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types.TimestampType
   *   - series-head/tail chunk: no context beyond the true series edge ⇒
   *     the positional edge rules fire exactly where the reference's do.
   *
-  * TWO DESIGN POINTS make this cost ~one exchange+sort, i.e. the same
+  * THREE DESIGN POINTS make this cost ~one exchange+sort, i.e. the same
   * stage shape as the unchunked window with the straggler removed:
   *
   *  1. Context routing is STATELESS — a row's destinations (own bucket,
@@ -36,28 +37,33 @@ import org.apache.spark.sql.types.TimestampType
   *     a lambda-filtered array-of-structs explode ran interpreted at 17 s
   *     per 100M rows — the `sequence`-explode form costs ~1 s.)
   *
-  *  2. Cold series are NOT chunked — with `minRowsToChunk` set, series
-  *     below the threshold keep a constant chunk id, making their
-  *     `(seriesId, chunk)` partition IDENTICAL to the plain per-series
-  *     window (hash partitioning already balances them; only hot sensors
-  *     straggle). Everything still runs in ONE window job — no
-  *     hot/cold union, no double scan — and `bucketSeconds` /
-  *     `marginSeconds` are sized for the hot cadence alone (hot sensors
-  *     are high-cadence by definition), so margin duplication is a
-  *     fraction of a percent instead of the tens of percent a
-  *     coldest-cadence margin would cost.
+  *  2. Only chunkable hot series are chunked — every other series keeps
+  *     a constant chunk id, making its `(seriesId, chunk)` partition
+  *     IDENTICAL to the plain per-series window (hash partitioning
+  *     already balances them; only hot sensors straggle). Everything
+  *     runs in ONE window job — no hot/cold union, no fallback union, no
+  *     double scan — and `bucketSeconds` / `marginSeconds` are sized for
+  *     the hot cadence alone (hot sensors are high-cadence by
+  *     definition), so margin duplication is a fraction of a percent
+  *     instead of the tens of percent a coldest-cadence margin would
+  *     cost.
   *
-  * Stateless routing is only exact when the time margin actually holds
-  * the rows a frame needs, so a cheap VALIDATION census (per-chunk
-  * counts — aggregate-only, never shuffling data rows) checks, per
-  * chunked chunk: adjacent chunk ids are consecutive (a time gap longer
-  * than a bucket breaks relay), each boundary margin holds ≥ min(m, n)
-  * rows, and chunks thinner than m rows don't sit between two
-  * neighbors. Series violating any of it — irregular cadence vs the
-  * chosen margin, long gaps — fall back to the exact unchunked path;
-  * detectors with unbounded context (`contextRows < 0`, the EWMA
-  * recursion) always do. Margins too small never break correctness —
-  * they just push series to the fallback.
+  *  3. ONE census action decides which series are chunked. It counts
+  *     rows per (series, bucket) with head- and tail-margin counts — an
+  *     aggregate that never shuffles data rows — and a window over those
+  *     chunk SUMMARIES gives each series its exact row total and its
+  *     relay validity: adjacent chunk ids are consecutive (a time gap
+  *     longer than a bucket breaks relay), each boundary margin holds
+  *     ≥ min(m, n) rows, and chunks thinner than m rows don't sit
+  *     between two neighbors. The driver collects the keys of the series
+  *     holding ≥ `minRowsToChunk` rows that pass, and joins them back as
+  *     a broadcast local relation. Series failing validation — irregular
+  *     cadence vs the chosen margin, long gaps — take the constant chunk
+  *     id like cold series, i.e. the exact unchunked window; detectors
+  *     with unbounded context (`contextRows < 0`, the EWMA recursion) and
+  *     per-row detectors (`contextRows == 0`, nothing to straggle) skip
+  *     chunking altogether. Margins too small never break correctness —
+  *     they just leave series unchunked.
   *
   * At 100 TB this is the difference between a stage bounded by the
   * largest sensor and one bounded by `bucketSeconds` of any sensor. Pick
@@ -77,12 +83,10 @@ object ChunkedDetect {
     * @param marginSeconds boundary zone copied to the adjacent chunk as
     *   context; defaults to `bucketSeconds / 4`. Must cover
     *   `det.contextRows` rows at the chunked series' cadence or the
-    *   series falls back to the unchunked path.
-    * @param minRowsToChunk when > 0, only series holding at least this
-    *   many rows are chunked (estimated from a seeded 1% sample — the
-    *   split is a pure performance heuristic, both paths are exact, so a
-    *   misclassified borderline series costs nothing but a sliver of
-    *   duplication or residual skew). 0 chunks every series.
+    *   series stays unchunked.
+    * @param minRowsToChunk only series holding at least this many rows
+    *   (an exact per-series count from the census) are chunked; 0 chunks
+    *   every series that passes validation.
     */
   def detect(det: Detector, df: DataFrame, spec: SeriesSpec,
       bucketSeconds: Long, marginSeconds: Long = -1L,
@@ -92,90 +96,60 @@ object ChunkedDetect {
     require(margin > 0 && margin <= bucketSeconds,
       "marginSeconds must be in (0, bucketSeconds]")
     val m = det.contextRows
-    if (m < 0) return det.detect(df, spec)
+    if (m <= 0) return det.detect(df, spec)
 
-    val sidCols = spec.seriesId
-    val withHot =
-      if (minRowsToChunk > 0 && sidCols.nonEmpty) {
-        // sampled hot-list: a full per-series count pass would cost as
-        // much as a detector stage at scale; the 0.5 slack leans
-        // borderline series toward chunking (chunking a medium series
-        // costs a sliver of duplication, missing a truly hot one
-        // re-creates the straggler)
-        val frac = 0.01
-        val hot = df.sample(withReplacement = false, frac, seed = 8293L)
-          .groupBy(sidCols.map(col): _*)
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") >= math.max(1L, (minRowsToChunk * frac * 0.5).toLong))
-          .select(sidCols.map(col): _*)
-          .localCheckpoint() // tiny hot-sensor list → broadcast flag join
-        if (hot.limit(1).count() == 0) return det.detect(df, spec)
-        df.join(broadcast(hot.withColumn(HOT, lit(true))), sidCols, "left")
-          .withColumn(HOT, coalesce(col(HOT), lit(false)))
-      } else df.withColumn(HOT, lit(true))
-    chunkAll(det, df, withHot, spec, bucketSeconds, margin, m)
-  }
-
-  /** Run the chunked evaluation over `data` (= `original` + HOT flag):
-    * hot rows get time-bucket chunk ids and margin context copies, cold
-    * rows a constant chunk id (≡ their plain per-series window) — one
-    * window job covers both.
-    */
-  private def chunkAll(det: Detector, original: DataFrame, data: DataFrame,
-      spec: SeriesSpec, bucketSeconds: Long, margin: Long, m: Int): DataFrame = {
     val sid = spec.seriesId
     val bMicros = bucketSeconds * 1000000L
     val mMicros = margin * 1000000L
     val tsu = unix_micros(col(spec.ts).cast(TimestampType))
-    val chunked = data.withColumn(C,
-      when(col(HOT), floor(tsu / bMicros).cast("long")).otherwise(lit(0L)))
-    val chunkSpec = spec.copy(seriesId = sid :+ C)
-    if (m == 0) // per-row detector: chunk key changes nothing but skew
-      return det.detect(chunked, chunkSpec).drop(C, HOT)
+    val bucket = floor(tsu / bMicros).cast("long")
 
-    // ---- validation census over the chunked (hot) rows only: per-chunk
-    // counts — aggregate + a window over chunk SUMMARIES, the data rows
-    // are never shuffled
-    val off = tsu - col(C) * bMicros // offset inside the bucket, [0, b)
-    val wS = (if (sid.isEmpty) Window.partitionBy()
-              else Window.partitionBy(sid.map(col): _*)).orderBy(col(C))
-    val census = chunked.filter(col(HOT))
-      .withColumn("__off", off)
-      .groupBy((sid :+ C).map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-        count(when(col("__off") < mMicros, 1)).as("__hm"),
-        count(when(col("__off") >= bMicros - mMicros, 1)).as("__tm"))
-      .select((sid :+ C).map(col) ++ Seq(
-        col("__n"), col("__hm"), col("__tm"),
-        lag(col(C), 1).over(wS).as("__prevC"),
-        lead(col(C), 1).over(wS).as("__nextC")): _*)
-    // chunk fails as a FORWARD context provider when its successor isn't
-    // the adjacent bucket, its tail margin misses rows a frame needs, or
-    // it's too thin to relay (< m rows with neighbors both sides);
-    // mirrored backward
+    // ---- the census: per-chunk counts, then a window over the chunk
+    // summaries — the data rows are never shuffled
+    val off = tsu - bucket * bMicros // offset inside the bucket, [0, b)
+    val wSeries = if (sid.isEmpty) Window.partitionBy()
+                  else Window.partitionBy(sid.map(col): _*)
+    val wChunks = wSeries.orderBy(col(C))
+    // a chunk fails as a FORWARD context provider when its successor
+    // isn't the adjacent bucket, its tail margin misses rows a frame
+    // needs, or it's too thin to relay (< m rows with neighbors both
+    // sides); mirrored backward
     val badFwd = col("__nextC").isNotNull && (col("__nextC") =!= col(C) + 1 ||
       col("__tm") < least(lit(m.toLong), col("__n")) ||
       (col("__n") < m && col("__prevC").isNotNull))
     val badBwd = col("__prevC").isNotNull && (col("__prevC") =!= col(C) - 1 ||
       col("__hm") < least(lit(m.toLong), col("__n")) ||
       (col("__n") < m && col("__nextC").isNotNull))
-    val badFilter = badFwd || badBwd
+    val chunkable = df
+      .groupBy((sid.map(col) :+ bucket.as(C)): _*)
+      .agg(count(lit(1)).as("__n"),
+        count(when(off < mMicros, 1)).as("__hm"),
+        count(when(off >= bMicros - mMicros, 1)).as("__tm"))
+      .select((sid :+ C).map(col) ++ Seq(col("__n"), col("__hm"), col("__tm"),
+        lag(col(C), 1).over(wChunks).as("__prevC"),
+        lead(col(C), 1).over(wChunks).as("__nextC")): _*)
+      .select((sid :+ "__prevC").map(col) ++ Seq(
+        sum(col("__n")).over(wSeries).as("__total"),
+        max((badFwd || badBwd).cast("int")).over(wSeries).as("__bad")): _*)
+      // one row per series: its first chunk
+      .filter(col("__prevC").isNull && col("__total") >= minRowsToChunk &&
+        col("__bad") === 0)
+      .select(sid.map(col): _*)
+      .collect() // the ONE census action
+    if (chunkable.isEmpty) return det.detect(df, spec)
 
-    if (sid.isEmpty) { // single unnamed series: all-or-nothing
-      if (census.filter(badFilter).limit(1).count() > 0)
-        return det.detect(original, spec)
-      return padAndDetect(det, chunked, chunkSpec, bMicros, mMicros)
-        .drop(C, CTX, HOT)
-    }
-    val badSeries = census.filter(badFilter).select(sid.map(col): _*).distinct()
-      .localCheckpoint() // tiny; read by the anti/semi joins below
-    val anyBad = badSeries.limit(1).count() > 0
-    val good = if (anyBad) chunked.join(badSeries, sid, "left_anti") else chunked
-    val goodOut = padAndDetect(det, good, chunkSpec, bMicros, mMicros)
-      .drop(C, CTX, HOT)
-    if (!anyBad) goodOut
-    else goodOut.unionByName(
-      det.detect(original.join(badSeries, sid, "left_semi"), spec))
+    val data =
+      if (sid.isEmpty) df.withColumn(HOT, lit(true)) // single unnamed series
+      else {
+        val keys = df.sparkSession.createDataFrame(chunkable.toSeq.asJava,
+            StructType(sid.map(df.schema(_))))
+          .withColumn(HOT, lit(true))
+        df.join(broadcast(keys), sid, "left")
+          .select(df.columns.map(df.col) :+
+            coalesce(col(HOT), lit(false)).as(HOT): _*)
+      }
+    padAndDetect(det, data.withColumn(C, when(col(HOT), bucket).otherwise(lit(0L))),
+      spec.copy(seriesId = sid :+ C), bMicros, mMicros).drop(C, CTX, HOT)
   }
 
   /** Pad each hot chunk with the margin-zone rows of its neighbors (pure

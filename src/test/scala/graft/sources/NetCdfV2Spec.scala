@@ -28,6 +28,15 @@ class NetCdfV2Spec extends SparkSpecBase {
     assert(v1.exceptAll(v2).count() == 0 && v2.exceptAll(v1).count() == 0)
   }
 
+  test("a missing path fails naming it, not with an internal error") {
+    val missing = s"${System.getProperty("java.io.tmpdir")}/no-such-dir-${java.util.UUID.randomUUID}/x.nc"
+    val e = intercept[Exception](spark.read.format("netcdf").load(missing).schema)
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(_.contains(s"no netcdf files at $missing")),
+      s"missing-path error does not name the path: ${messages.mkString(" / ")}")
+  }
+
   test("column pruning reaches the scan as variable selection") {
     val df = spark.read.format("netcdf").load(fixture)
       .select("ts", "TEMP")

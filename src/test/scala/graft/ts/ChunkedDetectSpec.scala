@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** ChunkedDetect must reproduce the unchunked masks BIT-IDENTICALLY for
   * every row-bounded detector, across chunk-boundary frames, positional
-  * edge rules, thin head/tail chunks, and the thin-interior-chunk
-  * fallback.
+  * edge rules, thin head/tail chunks, and series that fail validation
+  * (thin interior chunks, gaps) and stay unchunked.
   */
 class ChunkedDetectSpec extends SparkSpecBase {
 
@@ -60,7 +60,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
   test("thin interior chunks trigger the exact fallback (gap-heavy series)") {
     // 40 hourly rows, then a 10-day gap, then ONE row, another gap, 40
     // more: with a 6h bucket the lone row is a thin interior chunk for
-    // hampel_w5 (m=5) — the series must fall back and still be exact
+    // hampel_w5 (m=5) — the series must stay unchunked and still be exact
     import spark.implicits._
     val rows =
       (0 until 40).map(i => (java.sql.Timestamp.valueOf(f"2020-01-01 ${i / 4}%02d:${15 * (i % 4)}%02d:00"), math.sin(i) * 3)) ++
@@ -98,6 +98,39 @@ class ChunkedDetectSpec extends SparkSpecBase {
     stacked.unpersist()
   }
 
+  test("one call mixes chunked hot, gap-failing hot and cold series") {
+    // quant_train (1000 hourly rows) is hot and chunkable; its copy with
+    // a 30-day gap after row 500 is just as hot but breaks the bucket
+    // relay; walk and irregular (120 rows each) are cold. The gap series
+    // must take the plain window inside the same job — no fallback union
+    val quant = golden("quant_train")
+    val gap = 30L * 86400000L
+    val gappy = GoldenSeries("gappy", quant.rows.zipWithIndex.map {
+      case ((ts, v, m), i) =>
+        (if (i < 500) ts else new java.sql.Timestamp(ts.getTime + gap), v, m)
+    })
+    val names = Seq("quant_train", "gappy", "walk", "irregular")
+    val spec = SeriesSpec(seriesId = Seq("sid"))
+    val stacked = stackedDf(Seq(quant, gappy, golden("walk"), golden("irregular"))).cache()
+    for (dName <- Seq("hampel_w5", "combined")) {
+      val det = dets(dName)
+      val out = ChunkedDetect.detect(det, stacked, spec,
+        bucketSeconds = 24 * 3600L, marginSeconds = 12 * 3600L,
+        minRowsToChunk = 500L)
+      for (s <- names)
+        assert(maskOf(out.filter(col("sid") === s)) ==
+          maskOf(det.detect(stacked.filter(col("sid") === s), spec)),
+          s"$dName on $s via the mixed chunked run")
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("Union"), s"fallback union in the plan:\n$plan")
+      val exchanges = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
+      assert(exchanges.size == 1 &&
+        exchanges.head.matches(".*hashpartitioning\\(sid#\\d+, __chunk#\\d+L?, \\d+\\).*"),
+        s"want one window exchange keyed on (sid, __chunk):\n${exchanges.mkString("\n")}")
+    }
+    stacked.unpersist()
+  }
+
   test("unbounded-context detectors (EWMA) pass through unchunked") {
     assert(EwmaDetector(0.3, 3.0).contextRows == -1)
     val g = golden("walk")
@@ -111,7 +144,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
   test("chunked plan partitions windows by (series, chunk), not by series alone") {
     val stacked = stackedDf(Seq(golden("walk"), golden("quant_train")))
     // hourly series, 24h buckets, 12h margins: validation passes for
-    // m=5, so the pure chunked plan (no fallback union) must be used
+    // m=5, so both series are chunked
     val out = ChunkedDetect.detect(HampelDetector(5, 3), stacked,
       SeriesSpec(seriesId = Seq("sid")), 24 * 3600L, 12 * 3600L)
     val plan = out.queryExecution.executedPlan.toString
