@@ -8,13 +8,15 @@ import graft.ts._
   * (`tests/test_detectors.py:177-194`): example.csv (134 hourly rows)
   * through `CombinedDetector([ConstantValueDetector, RangeDetector(max
   * 2.0)])`. Expected counts computed by running the reference on the
-  * same file: 3 range flags, 13 constant flags, 16 combined.
+  * same file: 3 range flags, 13 constant flags, 16 combined. The two
+  * tests on that file cancel, naming it, where it is absent.
   */
 class CsvSourceSpec extends SparkSpecBase {
 
   val examplePath = "/root/reference/tests/data/example.csv"
 
   test("example.csv through CombinedDetector matches the reference masks") {
+    assumeReferenceFile(examplePath)
     val df = TimeSeriesCSV.read(spark, examplePath).cache()
     assert(df.count() == 134)
     assert(df.schema.map(f => (f.name, f.dataType.typeName)) ==
@@ -31,6 +33,7 @@ class CsvSourceSpec extends SparkSpecBase {
   }
 
   test("partitioned anomaly sink prunes on the date partition") {
+    assumeReferenceFile(examplePath)
     val df = TimeSeriesCSV.read(spark, examplePath)
     val detected = graft.ts.RangeDetector(maxValue = 2.0).detect(df)
     val out = java.nio.file.Files.createTempDirectory("sink").toString + "/anoms"

@@ -7,13 +7,16 @@ import graft.ts._
   * (`/root/reference/tests/data/BO_TS_MO_FINO2.nc`, the cmems.ipynb
   * workflow) through the pure-JVM netCDF reader and runs a detector over
   * the decoded series. Expected values below were independently decoded
-  * from the raw HDF5 bytes (zlib + struct, no netCDF library).
+  * from the raw HDF5 bytes (zlib + struct, no netCDF library). Tests
+  * that read that file cancel, naming it, where it is absent; the
+  * committed fixtures under `golden/` carry the rest.
   */
 class NetCdfSourceSpec extends SparkSpecBase {
 
   val fixture = "/root/reference/tests/data/BO_TS_MO_FINO2.nc"
 
   test("decodes TIME/TEMP/QC with CF units, scale_factor and _FillValue") {
+    assumeReferenceFile(fixture)
     val df = NetCDF.read(spark, fixture, valueVars = Seq("TEMP")).persist()
     // 34797 obs × 10 depth levels
     assert(df.count() == 347970L)
@@ -37,6 +40,7 @@ class NetCdfSourceSpec extends SparkSpecBase {
   }
 
   test("detector over the decoded frame flags QC-bad samples (cmems workflow)") {
+    assumeReferenceFile(fixture)
     val df = NetCDF.read(spark, fixture, valueVars = Seq("TEMP"))
       .filter(col("series_id") === "TEMP:0")
     // the notebook's workflow: trust QC==1 as good data; a range detector
@@ -51,6 +55,7 @@ class NetCdfSourceSpec extends SparkSpecBase {
   }
 
   test("end-to-end CMEMS: decoded NetCDF through detectors reproduces reference masks bit-exactly") {
+    assumeReferenceFile(fixture)
     // golden/cmems_masks.csv = the REAL reference (pandas tsod) run over
     // the first 8000 decoded TEMP:0 samples (scripts/gen_cmems_golden.py;
     // input series dumped by DumpCmemsGolden) — so this asserts the full
@@ -133,24 +138,31 @@ class NetCdfSourceSpec extends SparkSpecBase {
     // multi-level fractal heaps, szip, exotic superblocks) must throw a
     // clear error, never silently mis-decode. Cheapest trigger: an HDF5
     // file whose superblock advertises a version the reader doesn't
-    // implement — flip the version byte of the real CMEMS fixture.
+    // implement. The reader checks that byte first on every file, so the
+    // carrier is the committed golden/classic_hdf5.nc (v0 superblock),
+    // plus the CMEMS fixture (v2 superblock) wherever it is on disk.
     import java.nio.file.{Files, Paths}
-    val bytes = Files.readAllBytes(Paths.get(fixture))
-    val mutated = bytes.clone()
-    mutated(8) = 9 // superblock version byte (after the 8-byte signature)
-    val tmp = Files.createTempFile("graft_bad_superblock", ".nc")
-    Files.write(tmp, mutated)
-    val e = intercept[Exception] {
-      NetCDF.read(spark, tmp.toString, valueVars = Seq("TEMP")).collect()
-    }
+    val carriers = Seq(getClass.getResource("/golden/classic_hdf5.nc").getPath) ++
+      Seq(fixture).filter(p => Files.isRegularFile(Paths.get(p)))
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("superblock v9")),
-      s"expected a clear superblock-version error, got: ${messages(e).mkString(" | ")}")
-    Files.delete(tmp)
+    carriers.foreach { carrier =>
+      val bytes = Files.readAllBytes(Paths.get(carrier))
+      val mutated = bytes.clone()
+      mutated(8) = 9 // superblock version byte (after the 8-byte signature)
+      val tmp = Files.createTempFile("graft_bad_superblock", ".nc")
+      Files.write(tmp, mutated)
+      val e = intercept[Exception] {
+        NetCDF.read(spark, tmp.toString, valueVars = Seq("TEMP")).collect()
+      }
+      assert(messages(e).exists(_.contains("superblock v9")),
+        s"$carrier: expected a clear superblock-version error, got: ${messages(e).mkString(" | ")}")
+      Files.delete(tmp)
+    }
   }
 
   test("readMany distributes parsing per file and tags series ids") {
+    assumeReferenceFile(fixture)
     val df = NetCDF.readMany(spark, fixture, valueVars = Seq("PSAL"))
     val sids = df.select("series_id").distinct().collect().map(_.getString(0))
     assert(sids.length == 10)

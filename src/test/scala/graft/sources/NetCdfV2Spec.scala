@@ -12,6 +12,7 @@ class NetCdfV2Spec extends SparkSpecBase {
   val fixture = "/root/reference/tests/data/BO_TS_MO_FINO2.nc"
 
   test("format(netcdf) infers the wide schema and decodes the CMEMS fixture") {
+    assumeReferenceFile(fixture)
     val df = spark.read.format("netcdf").load(fixture)
     val cols = df.columns.toSeq
     assert(cols.take(3) == Seq("file", "ts", "level"))
@@ -38,6 +39,7 @@ class NetCdfV2Spec extends SparkSpecBase {
   }
 
   test("column pruning reaches the scan as variable selection") {
+    assumeReferenceFile(fixture)
     val df = spark.read.format("netcdf").load(fixture)
       .select("ts", "TEMP")
     val plan = df.queryExecution.executedPlan.toString
@@ -64,6 +66,7 @@ class NetCdfV2Spec extends SparkSpecBase {
   }
 
   test("directory load fans out one partition per file with per-file tags") {
+    assumeReferenceFile(fixture)
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val dir = Files.createTempDirectory("ncv2")
     for (n <- Seq("station_a", "station_b"))
@@ -125,6 +128,7 @@ class NetCdfV2Spec extends SparkSpecBase {
   }
 
   test("QC-filtered detector workflow runs on the v2 frame") {
+    assumeReferenceFile(fixture)
     import graft.ts._
     val df = spark.read.format("netcdf").load(fixture)
       .filter(col("level") === 0)

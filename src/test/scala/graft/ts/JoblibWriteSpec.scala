@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   *     equal the engine's masks bit-for-bit.
   *
   * The python step is skipped (with a visible cancel, never a silent
-  * pass) if python3 is unavailable.
+  * pass) if python3 is unavailable or the reference's `tsod` package
+  * (`/root/reference/tsod/__init__.py`) is absent.
   */
 class JoblibWriteSpec extends SparkSpecBase {
 
@@ -51,6 +52,7 @@ class JoblibWriteSpec extends SparkSpecBase {
     import scala.sys.process._
     val py = "which python3".!!.trim
     assume(py.nonEmpty, "python3 not available")
+    assumeReferenceFile("/root/reference/tsod/__init__.py")
     val tmp = java.nio.file.Files.createTempDirectory("joblib_write").toString
     // numba-free classes only (the container can't import tsod.hampel)
     val refLoadable: Seq[(String, Detector)] = Seq(

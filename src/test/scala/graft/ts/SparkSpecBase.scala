@@ -1,5 +1,6 @@
 package graft.ts
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.LocalDateTime
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -11,6 +12,14 @@ import scala.io.Source
 trait SparkSpecBase extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSpecBase.session
+
+  /** Cancels the calling test, naming `path`, when an input that only the
+    * reference checkout holds is absent; wherever it exists the test runs
+    * unchanged.
+    */
+  def assumeReferenceFile(path: String): Unit =
+    assume(Files.isRegularFile(Paths.get(path)),
+      s"$path absent (reference checkout not on this host)")
 
   /** Golden CSV → (header mask names, rows). value empty string = null. */
   def loadGolden(name: String): GoldenSeries = {
