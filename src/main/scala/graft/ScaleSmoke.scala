@@ -54,7 +54,11 @@ object ScaleSmoke {
       .filter(col("is_anomaly")).count())
     stage("rolling_std_w10")(RollingStdDevDetector(10, 3.0).detect(df, spec)
       .filter(col("is_anomaly")).count())
+    stage("rolling_std_w64")(RollingStdDevDetector(64, 3.0).detect(df, spec)
+      .filter(col("is_anomaly")).count())
     stage("hampel_w5")(HampelDetector(5, 3.0).detect(df, spec)
+      .filter(col("is_anomaly")).count())
+    stage("hampel_w64")(HampelDetector(64, 3.0).detect(df, spec)
       .filter(col("is_anomaly")).count())
     stage("ensemble_3det")(CombinedDetector(Seq(
       RangeDetector(-15, 15), DiffDetector(5.0), HampelDetector(5, 3.0)))
@@ -104,13 +108,15 @@ object ScaleSmoke {
     // census action) is cut into time-bucket chunks with boundary-margin
     // context copied by stateless per-row routing; cold series keep
     // their plain window inside the same job.
-    // Sizing is for the HOT cadence alone (one row per 10 s): 2M s
-    // buckets put ~200k rows in each hot chunk (≈50-way parallel), 20k s
-    // margins hold 2000 rows ≫ the ensemble's contextRows = 5, and
-    // duplication is 2·0.02/2 = 2% of the hot series only.
+    // Sizing is for the HOT cadence alone (one row per 10 s over
+    // totalRows seconds): the hot series holds ~totalRows/10 rows, so a
+    // gate at half of that chunks it at every size while a cold series
+    // (~0.9·totalRows/numSeries rows) stays whole; totalRows/10-second
+    // buckets (at least 200k s) cut it into up to 10 chunks, 20k s
+    // margins hold 2000 rows ≫ the ensemble's contextRows = 5.
     def chunkedOut = ChunkedDetect.detect(ensemble, skewDf, spec,
-      bucketSeconds = 2000000L, marginSeconds = 20000L,
-      minRowsToChunk = 1000000L)
+      bucketSeconds = math.max(200000L, totalRows / 10), marginSeconds = 20000L,
+      minRowsToChunk = math.max(1L, totalRows / 20))
     stage("ensemble_skew_chunked")(
       chunkedOut.filter(col("is_anomaly")).count())
     val chunkedChecksum = hotMaskChecksum(chunkedOut)

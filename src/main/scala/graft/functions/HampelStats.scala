@@ -9,17 +9,19 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Window aggregate computing the Hampel filter's two order statistics —
-  * `med = median(frame)` and `rawmad = median(|frame - med|)` — in ONE
-  * buffer (SURVEY.md §2.1 #7's reserved `TypedImperativeAggregate`
-  * option (b)). The built-in formulation materializes a `collect_list`
-  * array column and runs two `array_sort`s through three projections per
-  * row; this sorts a primitive buffer once and derives both medians from
-  * it, producing bit-identical values (same sort order, same
-  * middle-element averaging as numpy's `nanmedian`).
+/** Aggregate computing the Hampel filter's two order statistics —
+  * `med = median(group)` and `rawmad = median(|group - med|)` — in ONE
+  * buffer, registered in SQL as `hampel_stats`. It sorts a primitive
+  * buffer once and derives both medians from it, with the same sort
+  * order and middle-element averaging as numpy's `nanmedian`.
   *
   * Nulls are skipped on update (matching `collect_list` /
-  * `np.nanmedian`); an all-null frame yields a null struct.
+  * `np.nanmedian`); an all-null group yields a null struct.
+  *
+  * Over a bounded sliding window frame Spark re-aggregates the whole
+  * frame on every row, so [[graft.ts.HampelDetector]] does not use it
+  * there: it reads the same struct, bit for bit, from [[TailHampel]]
+  * over the growing frame, one ring push per row.
   */
 case class HampelStats(
     child: Expression,
@@ -105,10 +107,11 @@ object HampelStats {
   }
 
   /** numpy nanmedian rule on a sorted array. */
-  def medianOfSorted(a: Array[Double]): Double = {
-    val n = a.length
+  def medianOfSorted(a: Array[Double]): Double = medianOfSorted(a, a.length)
+
+  /** numpy nanmedian rule on the sorted prefix `a(0 until n)`. */
+  def medianOfSorted(a: Array[Double], n: Int): Double =
     if (n % 2 == 1) a(n / 2) else (a(n / 2 - 1) + a(n / 2)) / 2.0
-  }
 
   /** `hampel_stats(v)` as a Column aggregate, usable `.over(frame)`. */
   def apply(v: Column): Column =

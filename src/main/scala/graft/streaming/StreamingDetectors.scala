@@ -90,8 +90,10 @@ object StreamingDetectors {
   /** Centered rolling-stddev detector on a stream: emits row t once
     * `lookahead` future rows exist (or on eos), computing the same
     * guarded sample-stddev flag as the batch
-    * [[graft.ts.RollingStdDevDetector]] — verified mask-identical in
-    * StreamingSpec.
+    * [[graft.ts.RollingStdDevDetector]], with the batch kernel's
+    * arithmetic ([[graft.functions.TailStd.stddevSamp]]), so the two agree
+    * to the bit even where the stddev equals `maxStd` — verified
+    * mask-identical in StreamingSpec.
     */
   def rollingStdStream(events: Dataset[StreamEvent], windowSize: Int,
       maxStd: Double, center: Boolean = true): Dataset[FlaggedPoint] = {
@@ -101,11 +103,8 @@ object StreamingDetectors {
     slidingWindowStream(events, back, ahead, gate = ahead) {
       (win, centerIdx, rn, _) =>
         val vals = win.flatMap(_._2)
-        rn != 1 && vals.length == windowSize && {
-          val mean = vals.sum / vals.length
-          val variance = vals.map(v => (v - mean) * (v - mean)).sum / (vals.length - 1)
-          math.sqrt(variance) > maxStd
-        }
+        rn != 1 && vals.length == windowSize &&
+          graft.functions.TailStd.stddevSamp(vals.toArray, 0, windowSize) > maxStd
     }
   }
 

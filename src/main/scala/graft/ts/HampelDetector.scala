@@ -2,6 +2,8 @@ package graft.ts
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import graft.util.Json
 import graft.util.Json._
 
@@ -14,12 +16,16 @@ import graft.util.Json._
   * (`np.nanmedian`) and a null x_t is never an anomaly.
   *
   * The reference needs a numba-JIT'd scalar loop; here both medians come
-  * from the custom [[graft.functions.HampelStats]]
-  * `TypedImperativeAggregate` over the frame (one sorted primitive
-  * buffer per row, no UDF, distributed by `seriesId`). `impl =
-  * "builtin"` keeps the pure-built-ins formulation (`collect_list` +
-  * `array_sort` + element access) — bit-identical results, used to
-  * cross-check the native aggregate.
+  * from the custom [[graft.functions.TailHampel]] aggregate of the last
+  * 2·ws rows over the growing frame that ends ws-1 rows ahead: for every
+  * row the edge rule can flag, those rows are exactly its window. One
+  * ring push per row, no UDF, distributed by `seriesId`, and one window
+  * operator with the edge rule's row number and count. The values are
+  * bit-identical to [[graft.functions.HampelStats]] over the sliding
+  * frame. `impl = "builtin"` keeps the pure-built-ins formulation
+  * (`collect_list` + `array_sort` + element access over the sliding
+  * frame) — bit-identical results, used to cross-check the native
+  * aggregate.
   */
 final case class HampelDetector(
     windowSize: Int = 5,
@@ -35,35 +41,32 @@ final case class HampelDetector(
 
   override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame = {
     val ws = windowSize
-    val frame = spec.w.rowsBetween(-ws.toLong, (ws - 1).toLong)
     val v = TsOps.cleanValue(spec)
     val (rn, cnt) = TsOps.rowNumberAndCount(spec)
     val (rnC, cntC) = ("__hampel_rn", "__hampel_cnt")
-    val withMedMad = if (impl == "native") {
+    val (stats, med, rawmad) = if (impl == "native") {
       val statsC = "__hampel_stats"
-      df.withColumn(statsC, graft.functions.HampelStats(v).over(frame))
-        .withColumn(rnC, rn).withColumn(cntC, cnt)
-        .withColumn("__hampel_med", col(statsC).getField("med"))
-        .withColumn("__hampel_mad", lit(k) * col(statsC).getField("rawmad"))
-        .drop(statsC)
+      (statsC -> graft.functions.TailHampel(v, 2 * ws).over(TsOps.growingFrame(spec.w, ws - 1)),
+        col(statsC).getField("med"), col(statsC).getField("rawmad"))
     } else {
       val arrC = "__hampel_arr"
-      df
-        // collect_list skips nulls — matches np.nanmedian's NaN skipping
-        .withColumn(arrC, collect_list(v).over(frame))
-        .withColumn(rnC, rn).withColumn(cntC, cnt)
-        .withColumn("__hampel_med", TsOps.sortedArrayMedian(array_sort(col(arrC))))
-        .withColumn("__hampel_mad",
-          lit(k) * TsOps.sortedArrayMedian(
-            array_sort(transform(col(arrC), x => abs(x - col("__hampel_med"))))))
-        .drop(arrC)
+      // collect_list skips nulls — matches np.nanmedian's NaN skipping
+      val sorted = array_sort(collect_list(v).over(spec.w.rowsBetween(-ws.toLong, (ws - 1).toLong)))
+      val m = TsOps.sortedArrayMedian(col(arrC))
+      (arrC -> sorted, m,
+        TsOps.sortedArrayMedian(array_sort(transform(col(arrC), x => abs(x - m)))))
     }
-    withMedMad
-      .withColumn(spec.flag,
-        col(rnC) > ws && col(rnC) <= col(cntC) - ws &&
-          coalesce(abs(v - col("__hampel_med")) > lit(threshold) * col("__hampel_mad"),
-            lit(false)))
-      .drop("__hampel_med", "__hampel_mad", rnC, cntC)
+    val flag = (col(rnC) > ws && col(rnC) <= col(cntC) - ws &&
+      coalesce(abs(v - med) > lit(threshold) * (lit(k) * rawmad), lit(false))).as(spec.flag)
+    // two projections, each analyzed once: the window columns, then the
+    // input's columns with the flag appended (or replaced in place, as
+    // withColumn does)
+    val staged = df.select(col("*") +: Seq(stats, rnC -> rn, cntC -> cnt)
+      .map { case (name, c) => c.as(name) }: _*)
+    val isFlag = (name: String) => SQLConf.get.resolver(name, spec.flag)
+    val kept = staged.queryExecution.analyzed.output.take(df.columns.length)
+      .map(a => if (isFlag(a.name)) flag else ColumnBridge.column(a))
+    staged.select((if (df.columns.exists(isFlag)) kept else kept :+ flag): _*)
   }
 
   /** Reference display parity (`hampel.py:89-90` __str__). */

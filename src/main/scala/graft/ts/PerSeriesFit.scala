@@ -71,22 +71,15 @@ object PerSeriesFit {
   def rollingStdDetect(train: DataFrame, data: DataFrame,
       windowSize: Int = 10, center: Boolean = true,
       spec: SeriesSpec = SeriesSpec(), roundTo: Int = -1): DataFrame = {
-    val v = TsOps.cleanValue(spec)
-    val trainStd = TsOps.guarded(
-      stddev_samp, v, TsOps.trailingFrame(spec.w, windowSize), windowSize)
     val rawMax = max(col("__s"))
-    val fitted = train.withColumn("__s", trainStd)
+    val trainStd = RollingStdDevDetector.rollingStd(spec, windowSize, center = false)
+    val fitted = train.select(spec.seriesId.map(col) :+ trainStd.as("__s"): _*)
       .groupBy(spec.seriesId.map(col): _*)
       .agg((if (roundTo >= 0) round(rawMax, roundTo) else rawMax).as("__max_std"))
-      .select(spec.seriesId.map(col) :+ col("__max_std"): _*)
-    val frame =
-      if (center) TsOps.centeredFrame(spec.w, windowSize)
-      else TsOps.trailingFrame(spec.w, windowSize)
-    val std = TsOps.guarded(stddev_samp, v, frame, windowSize)
-    val (rn, _) = TsOps.rowNumberAndCount(spec)
+    val std = RollingStdDevDetector.rollingStd(spec, windowSize, center)
     data.join(fitted, spec.seriesId, "left")
       .withColumn(spec.flag,
-        coalesce(std > col("__max_std"), lit(false)) && rn =!= 1)
+        coalesce(std > col("__max_std"), lit(false)) && row_number().over(spec.w) =!= 1)
       .drop("__max_std")
   }
 

@@ -1,6 +1,6 @@
 package graft.ts
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.util.Json
 import graft.util.Json._
@@ -13,6 +13,11 @@ import graft.util.Json._
   * forced false (`detectors.py:215`). `fit` learns the max RIGHT-ALIGNED
   * rolling stddev even when the detector itself is centered — an asymmetry
   * of the reference (`detectors.py:206` vs `:212`) preserved for parity.
+  *
+  * The stddev of a window is [[graft.functions.TailStd]] of its
+  * `windowSize` rows over the growing frame that ends at the window's
+  * last row — one ring push per row and one window operator,
+  * bit-identical to Spark's `stddev_samp` over the sliding frame.
   */
 final case class RollingStdDevDetector(
     windowSize: Int = 10,
@@ -21,21 +26,14 @@ final case class RollingStdDevDetector(
 
   override def contextRows: Int = windowSize // centered/trailing w-row frame
 
-  override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame = {
-    val v = TsOps.cleanValue(spec)
-    val frame =
-      if (center) TsOps.centeredFrame(spec.w, windowSize)
-      else TsOps.trailingFrame(spec.w, windowSize)
-    val std = TsOps.guarded(stddev_samp, v, frame, windowSize)
-    val (rn, _) = TsOps.rowNumberAndCount(spec)
+  override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame =
     df.withColumn(spec.flag,
-      coalesce(std > lit(maxStd), lit(false)) && rn =!= 1)
-  }
+      coalesce(RollingStdDevDetector.rollingStd(spec, windowSize, center) > lit(maxStd),
+        lit(false)) && row_number().over(spec.w) =!= 1)
 
   override def fit(df: DataFrame, spec: SeriesSpec = SeriesSpec()): RollingStdDevDetector = {
     validate(df, spec)
-    val v = TsOps.cleanValue(spec)
-    val std = TsOps.guarded(stddev_samp, v, TsOps.trailingFrame(spec.w, windowSize), windowSize)
+    val std = RollingStdDevDetector.rollingStd(spec, windowSize, center = false)
     val row = df.select(std.as("__s")).agg(max(col("__s")).as("m")).head()
     if (row.isNullAt(0)) this else copy(maxStd = row.getDouble(0))
   }
@@ -53,6 +51,22 @@ final case class RollingStdDevDetector(
 }
 
 object RollingStdDevDetector {
+  /** Each row's sample stddev over its centered or trailing `windowSize`
+    * frame, null unless the frame holds `windowSize` non-null values (the
+    * `guarded` rule). A centered frame ends ⌊(w-1)/2⌋ rows ahead, so it is
+    * null within that many rows of the series' end, where it is short.
+    */
+  private[ts] def rollingStd(spec: SeriesSpec, windowSize: Int, center: Boolean): Column = {
+    val ahead = if (center) (windowSize - 1) / 2 else 0
+    val std = graft.functions.TailStd(TsOps.cleanValue(spec), windowSize)
+      .over(TsOps.growingFrame(spec.w, ahead))
+    if (ahead == 0) std
+    else {
+      val (rn, cnt) = TsOps.rowNumberAndCount(spec)
+      when(rn <= cnt - ahead, std)
+    }
+  }
+
   def fromJson(j: JValue): RollingStdDevDetector = RollingStdDevDetector(
     j("window_size").num.toInt, j("max_std").num,
     j("center") match { case JBool(b) => b; case _ => true })

@@ -31,12 +31,5 @@ final case class SeriesSpec(
     p.orderBy(orderBy.map(col): _*)
   }
 
-  /** Whole-partition window (no order ⇒ frame = entire series); used for
-    * per-series row counts when masking edges.
-    */
-  def wPartition: WindowSpec =
-    if (seriesId.isEmpty) Window.partitionBy()
-    else Window.partitionBy(seriesId.map(col): _*)
-
   def valueCol: Column = col(value)
 }

@@ -1,7 +1,7 @@
 package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.WindowSpec
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, TimestampType}
 
@@ -66,8 +66,17 @@ private[graft] object TsOps {
   def centeredFrame(w: WindowSpec, size: Int): WindowSpec =
     w.rowsBetween(-(size / 2).toLong, ((size - 1) / 2).toLong)
 
-  def trailingFrame(w: WindowSpec, size: Int): WindowSpec =
-    w.rowsBetween(-(size - 1).toLong, 0L)
+  /** `ROWS BETWEEN UNBOUNDED PRECEDING AND ahead FOLLOWING`: Spark updates
+    * an aggregate over this growing frame once per row, so a tail
+    * aggregate ([[graft.functions.TailHampel]], [[graft.functions.TailStd]])
+    * costs one ring push per row where a bounded sliding frame
+    * re-aggregates the whole frame. At row t it reads the rows ending at
+    * t+ahead — `lead(tail, ahead)` without a second window operator —
+    * except within `ahead` rows of the series' end, where the frame stops
+    * growing and it reads the series' last rows instead.
+    */
+  def growingFrame(w: WindowSpec, ahead: Int): WindowSpec =
+    w.rowsBetween(Window.unboundedPreceding, ahead.toLong)
 
   /** Aggregate over a frame, null unless the frame holds exactly `size`
     * non-null values. `agg` must be a frame-less aggregate Column builder.
@@ -117,10 +126,12 @@ private[graft] object TsOps {
 
   /** 1-based position within the series and series length — used for the
     * reference's positional edge-masking (first/last element forcing,
-    * Hampel's unflagged head/tail).
+    * Hampel's unflagged head/tail). The count runs over the ordered
+    * window's whole-series frame, so both share one `Window` operator.
     */
   def rowNumberAndCount(spec: SeriesSpec): (Column, Column) =
-    (row_number().over(spec.w), count(lit(1)).over(spec.wPartition))
+    (row_number().over(spec.w),
+      count(lit(1)).over(spec.w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
 
   /** The reference's ConstantValueDetector mask pipeline
     * (`detectors.py:237-249`) applied to an arbitrary pre-materialized

@@ -27,6 +27,50 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(sorts == 1, s"expected 1 Sort, got $sorts:\n$plan")
   }
 
+  test("Hampel, rolling-std and a 3-member ensemble over a persisted frame: ONE exchange + ONE sort, no sliding aggregate frame") {
+    import org.apache.spark.sql.catalyst.expressions.{RowFrame, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions._
+    import graft.ts._
+    // the tail-of-frame kernels run over growing frames and share the
+    // ordered window's shuffle and sort (a single detector: its one window
+    // operator); a sliding (bounded-lower) ROWS frame on an aggregate
+    // would re-aggregate the whole frame per row
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val frame = spark.range(400).select((col("id") % 4).as("sid"),
+      col("id").as("ts"), sin(col("id")).as("value")).persist()
+    try {
+      frame.count()
+      val spec = SeriesSpec(seriesId = Seq("sid"))
+      for ((name, det) <- Seq(
+          "hampel" -> HampelDetector(5, 3.0),
+          "rolling_std" -> RollingStdDevDetector(10, 1.0),
+          "rolling_std_trailing" -> RollingStdDevDetector(10, 1.0, center = false),
+          "ensemble" -> CombinedDetector(Seq(
+            RangeDetector(-0.9, 0.9), DiffDetector(1.5), HampelDetector(5, 3.0))))) {
+        val df = det.detect(frame, spec)
+        val plan = nodes(df.queryExecution.executedPlan)
+        val exchanges = plan.count(_.isInstanceOf[Exchange])
+        val sorts = plan.count(_.isInstanceOf[SortExec])
+        val windows = plan.count(_.isInstanceOf[WindowExec])
+        assert(exchanges == 1 && sorts == 1 && (name == "ensemble" || windows == 1),
+          s"$name: $exchanges exchange(s), $sorts sort(s), $windows window(s):\n" +
+            df.queryExecution.executedPlan)
+        val sliding = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+          case WindowExpression(_: AggregateExpression, s) => s.frameSpecification
+        })).collect { case f @ SpecifiedWindowFrame(RowFrame, lower, _) if lower != UnboundedPreceding => f }
+        assert(sliding.isEmpty, s"$name aggregates over sliding frame(s) $sliding")
+      }
+    } finally frame.unpersist(blocking = true)
+  }
+
   test("projection-only pipeline queries carry ZERO exchanges (p49/p84/p89/p92/p95)") {
     // the design claim behind each: per-row column algebra end to end —
     // a shuffle appearing here means an aggregate/join crept into what

@@ -88,6 +88,27 @@ class StreamingSpec extends SparkSpecBase {
     assert(got == want)
   }
 
+  test("rollingStdStream matches batch where a window's stddev equals maxStd exactly") {
+    // on [8.4, 4.8, 6.4, 1.5] Spark's Welford update and a two-pass
+    // mean/variance differ in the last ulp, so a threshold at the batch
+    // value separates streams that replay the batch arithmetic from ones
+    // that do not
+    val window = Seq(8.4, 4.8, 6.4, 1.5)
+    val pts = (window ++ Seq(2.0, 7.5)).zipWithIndex.map { case (v, i) => Point("c", ts(i), v) }
+    import spark.implicits._
+    val frame = org.apache.spark.sql.expressions.Window
+      .partitionBy("series_id").orderBy("ts").rowsBetween(-2, 1)
+    val maxStd = pts.toDF().select(col("ts"), stddev_samp("value").over(frame))
+      .filter(col("ts") === ts(2)).head().getDouble(1)
+    val mean = window.sum / window.length
+    val twoPass = math.sqrt(window.map(v => (v - mean) * (v - mean)).sum / (window.length - 1))
+    assert(twoPass > maxStd, s"two-pass $twoPass vs batch $maxStd: the case lost its teeth")
+    val want = batchMask(RollingStdDevDetector(4, maxStd), pts)
+    assert(!want(("c", ts(2))))
+    val got = runWindowedStream(pts, splitAt = 3)(ds => rollingStdStream(ds, 4, maxStd))
+    assert(got == want)
+  }
+
   test("hampelStream matches batch HampelDetector incl. rn tail rule") {
     val pts = (0 until 16).map(i => Point("a", ts(i),
       if (i == 7) 40.0 else if (i == 11) -25.0 else i.toDouble)) ++ seriesB
