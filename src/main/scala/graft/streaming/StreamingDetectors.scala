@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.ts.{RangeDetector, SeriesSpec}
+import graft.ts.{CusumKernel, EwmaKernel, HoltKernel, RangeDetector, RecurrenceKernel, SeriesSpec}
 
 /** Structured Streaming variants of the detectors whose semantics permit
   * online evaluation (SURVEY.md §2.10; the reference is batch-only but
@@ -15,10 +15,12 @@ import graft.ts.{RangeDetector, SeriesSpec}
   *  - Diff/Gradient need exactly the previous sample: keyed
   *    `flatMapGroupsWithState` holds one (ts, value) per series — O(1)
   *    state per key, append-mode output.
-  *
-  * Centered-window detectors (rolling-std center=true, constant-*,
-  * Hampel) need future rows; they would emit with a bounded delay via a
-  * ring buffer in the same state pattern — deferred.
+  *  - Centered-window detectors (rolling-std, Hampel, constant-value/
+  *    -gradient) need future rows: a buffer of context and pending rows in
+  *    the same state pattern emits each row once its lookahead has
+  *    arrived (or on an end-of-series marker).
+  *  - EWMA, Holt and CUSUM run the batch detectors' own
+  *    [[graft.ts.RecurrenceKernel]]s ([[recurrenceStream]]).
   *
   * Contract: rows are processed in event-time order WITHIN each
   * micro-batch (sorted here) and batches must arrive in order per series
@@ -133,110 +135,46 @@ object StreamingDetectors {
     }
   }
 
-  final case class EwmaState(ewma: Double)
-
-  /** EWMA forecast-deviation detection on a stream — the batch
-    * [[graft.ts.EwmaDetector]] recursion with O(1) state per series
-    * (`ewma_t = α·x_t + (1−α)·ewma_{t-1}`; flag when
-    * `|x_t − ewma_{t-1}| > threshold`). The recursion is inherently
-    * sequential, which makes it a BETTER fit for streaming than batch:
-    * each event costs one multiply-add against one stored double, no
-    * lookahead, no window buffer.
+  /** EWMA, Holt and CUSUM on a stream: the batch detectors' kernels
+    * ([[graft.ts.EwmaDetector]], [[graft.ts.HoltDetector]],
+    * [[graft.ts.CusumDetector]]), hence their flags, with O(1) state per
+    * series: one multiply-add or max against stored doubles per event,
+    * no lookahead, no window buffer.
     */
   def ewmaStream(points: Dataset[Point], alpha: Double,
-      threshold: Double): Dataset[FlaggedPoint] = {
-    import points.sparkSession.implicits._
-    points.groupByKey(_.series_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Point], state: GroupState[EwmaState]) =>
-          val sorted = rows.toVector.sortBy(p => micros(p.ts))
-          var ewma: java.lang.Double = state.getOption.map(s => Double.box(s.ewma)).orNull
-          val out = sorted.map { p =>
-            // NaN behaves as null, like the batch cleanValue
-            val v: java.lang.Double =
-              if (p.value != null && p.value.isNaN) null else p.value
-            val anomaly = v != null && ewma != null &&
-              math.abs(v.doubleValue() - ewma.doubleValue()) > threshold
-            if (v != null)
-              ewma = if (ewma == null) v
-                else java.lang.Double.valueOf(alpha * v + (1 - alpha) * ewma)
-            FlaggedPoint(key, p.ts, p.value, anomaly)
-          }
-          if (ewma != null) state.update(EwmaState(ewma.doubleValue()))
-          out.iterator
-      }
-  }
+      threshold: Double): Dataset[FlaggedPoint] =
+    recurrenceStream(points, () => new EwmaKernel(alpha, threshold))
 
-  final case class HoltState(s: Double, b: Double)
-
-  /** Holt (level+trend) forecast deviation on a stream — the batch
-    * [[graft.ts.HoltDetector]] recursion with O(1) state per series
-    * (two doubles: level, trend). Identical arithmetic ordering to the
-    * batch scan, so flags are batch-identical.
-    */
   def holtStream(points: Dataset[Point], alpha: Double, beta: Double,
-      threshold: Double): Dataset[FlaggedPoint] = {
-    import points.sparkSession.implicits._
-    points.groupByKey(_.series_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Point], state: GroupState[HoltState]) =>
-          val sorted = rows.toVector.sortBy(p => micros(p.ts))
-          var seeded = state.exists
-          var s = state.getOption.map(_.s).getOrElse(0.0)
-          var b = state.getOption.map(_.b).getOrElse(0.0)
-          val out = sorted.map { p =>
-            val v: java.lang.Double =
-              if (p.value != null && p.value.isNaN) null else p.value
-            val anomaly = v != null && seeded &&
-              math.abs(v.doubleValue() - (s + b)) > threshold
-            if (v != null) {
-              if (!seeded) { s = v.doubleValue(); b = 0.0; seeded = true }
-              else {
-                val s1 = alpha * v.doubleValue() + (1 - alpha) * (s + b)
-                b = beta * (s1 - s) + (1 - beta) * b
-                s = s1
-              }
-            }
-            FlaggedPoint(key, p.ts, p.value, anomaly)
-          }
-          if (seeded) state.update(HoltState(s, b))
-          out.iterator
-      }
-  }
+      threshold: Double): Dataset[FlaggedPoint] =
+    recurrenceStream(points, () => new HoltKernel(alpha, beta, threshold))
 
-  final case class CusumState(sHi: Double, sLo: Double)
-
-  /** Two-sided CUSUM changepoint detection on a stream — the batch
-    * [[graft.ts.CusumDetector]] recursion with O(1) state per series
-    * (`S⁺ = max(0, S⁺ + x − (target+slack))`, mirrored low side; flag
-    * when either sum exceeds `threshold`). Like EWMA the recursion is
-    * one stored pair of doubles per series — no window buffer — and the
-    * arithmetic ordering matches the batch scan exactly, so flags are
-    * batch-identical.
-    */
   def cusumStream(points: Dataset[Point], target: Double, slack: Double,
-      threshold: Double): Dataset[FlaggedPoint] = {
+      threshold: Double): Dataset[FlaggedPoint] =
+    recurrenceStream(points, () => new CusumKernel(target, slack, threshold))
+
+  /** A seeded kernel's saved state, carried between micro-batches. */
+  final case class RecurrenceState(state: Array[Double])
+
+  /** Any [[RecurrenceKernel]] on a stream. Each micro-batch is sorted
+    * by event time per series; the kernel resumes from the series' saved
+    * state, which is written once the kernel is seeded.
+    */
+  def recurrenceStream(points: Dataset[Point],
+      kernel: () => RecurrenceKernel): Dataset[FlaggedPoint] = {
     import points.sparkSession.implicits._
-    val hi = target + slack
-    val lo = target - slack
     points.groupByKey(_.series_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Point], state: GroupState[CusumState]) =>
-          val sorted = rows.toVector.sortBy(p => micros(p.ts))
-          var sHi = state.getOption.map(_.sHi).getOrElse(0.0)
-          var sLo = state.getOption.map(_.sLo).getOrElse(0.0)
-          val out = sorted.map { p =>
-            val v: java.lang.Double =
-              if (p.value != null && p.value.isNaN) null else p.value
-            var anomaly = false
-            if (v != null) {
-              sHi = math.max(0.0, sHi + v.doubleValue() - hi)
-              sLo = math.max(0.0, sLo - v.doubleValue() + lo)
-              anomaly = sHi > threshold || sLo > threshold
-            }
+        (key: String, rows: Iterator[Point], state: GroupState[RecurrenceState]) =>
+          val k = kernel()
+          state.getOption.foreach(st => k.load(st.state))
+          val out = rows.toVector.sortBy(p => micros(p.ts)).map { p =>
+            // NaN behaves as null, like the batch cleanValue
+            val anomaly = p.value != null && !p.value.isNaN &&
+              k.step(p.value.doubleValue())
             FlaggedPoint(key, p.ts, p.value, anomaly)
           }
-          state.update(CusumState(sHi, sLo))
+          if (k.seeded) state.update(RecurrenceState(k.save()))
           out.iterator
       }
   }

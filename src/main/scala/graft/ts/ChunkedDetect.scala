@@ -60,9 +60,11 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
   *     a broadcast local relation. Series failing validation — irregular
   *     cadence vs the chosen margin, long gaps — take the constant chunk
   *     id like cold series, i.e. the exact unchunked window; detectors
-  *     with unbounded context (`contextRows < 0`, the EWMA recursion) and
-  *     per-row detectors (`contextRows == 0`, nothing to straggle) skip
-  *     chunking altogether. Margins too small never break correctness —
+  *     with unbounded context (`contextRows < 0`: the EWMA, Holt and
+  *     CUSUM recursions, which chunk through their own segmented scan,
+  *     [[RecursiveDetector.detectChunked]]) and per-row detectors
+  *     (`contextRows == 0`, nothing to straggle) skip chunking
+  *     altogether. Margins too small never break correctness —
   *     they just leave series unchunked.
   *
   * At 100 TB this is the difference between a stage bounded by the

@@ -1,8 +1,5 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import graft.util.Json
 import graft.util.Json._
 
@@ -20,210 +17,83 @@ import graft.util.Json._
   * deviation).
   *
   * Like [[EwmaDetector]] the recursion is not a window frame, so it runs
-  * as the same one-linear-scan-per-series mapPartitions shape with O(1)
-  * state that resets on series change (SURVEY.md "(d) mapPartitions as a
-  * last resort"). Nulls pass through unflagged without touching the
-  * sums. Arithmetic is ordered exactly as the DuckDB oracle's
-  * `list_reduce` — `(acc + x) − hi` / `(acc − x) + lo` — so flags are
-  * hash-reproducible.
+  * as a [[RecurrenceKernel]] scanned once per series ([[Recurrence]]),
+  * with the sums starting at 0 for each series. Nulls pass through
+  * unflagged without touching the sums. Arithmetic is ordered exactly
+  * as the DuckDB oracle's `list_reduce` — `(acc + x) − hi` /
+  * `(acc − x) + lo` — so flags are hash-reproducible.
+  *
+  * [[detectChunked]], the segmented scan for giant series: the recursion
+  * `s ← max(0, s + δ)` is MAX-PLUS affine in s. Running a whole chunk
+  * with per-sample deviations δ₁..δₙ from entry state s gives
+  * `s_out = max(s + T, M)` with `T = Σδ` and
+  * `M = max(0, max nonempty suffix sum of δ)` — a transfer that composes
+  * associatively, exactly like the EWMA chunk's `A·s + B`, kept for both
+  * sides. `s + T` reassociates the float additions the sequential scan
+  * interleaved with max-floors, so entry states can drift by ulps.
+  * EXCEPTION — exact on a dyadic grid: when every value and hi/lo
+  * constant is a multiple of 2^-g and all running magnitudes stay below
+  * 2^(53-g), every add/subtract/max here is exact IEEE arithmetic, so the
+  * transfer composition is associative and chunked == sequential
+  * BITWISE. The driver query `det_cusum_chunked` runs on
+  * floor(value·64)/64 (g = 6) to get that guarantee; at n samples of
+  * magnitude ~2^m per series the bound holds while n < 2^(47-m).
   */
 final case class CusumDetector(
     target: Double = 0.0,
     slack: Double = 0.0,
-    threshold: Double = Double.PositiveInfinity) extends Detector {
+    threshold: Double = Double.PositiveInfinity) extends RecursiveDetector {
 
   require(slack >= 0.0, "slack must be non-negative")
   require(threshold > 0.0, "threshold must be positive")
 
-  override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame = {
-    val inCols = df.columns.toSeq
-    val withV = df.withColumn("__v", TsOps.cleanValue(spec))
-    val arranged =
-      (if (spec.seriesId.isEmpty) withV.repartition(1)
-       else withV.repartition(spec.seriesId.map(col): _*))
-        .sortWithinPartitions((spec.seriesId ++ spec.orderBy).map(col): _*)
-    val schema = StructType(arranged.schema.fields :+
-      StructField(spec.flag, BooleanType, nullable = false))
-    val keyIdx = spec.seriesId.map(arranged.schema.fieldIndex)
-    val vIdx = arranged.schema.fieldIndex("__v")
-    val hi = target + slack
-    val lo = target - slack
-    val thr = threshold
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    arranged.mapPartitions { rows =>
-      var curKey: Seq[Any] = null
-      var sHi = 0.0
-      var sLo = 0.0
-      rows.map { r =>
-        val key = keyIdx.map(r.get)
-        if (key != curKey) { curKey = key; sHi = 0.0; sLo = 0.0 }
-        val v: java.lang.Double = if (r.isNullAt(vIdx)) null else r.getDouble(vIdx)
-        var anomaly = false
-        if (v != null) {
-          sHi = math.max(0.0, sHi + v.doubleValue() - hi)
-          sLo = math.max(0.0, sLo - v.doubleValue() + lo)
-          anomaly = sHi > thr || sLo > thr
-        }
-        Row.fromSeq(r.toSeq :+ anomaly)
-      }
-    }.toDF().select((inCols :+ spec.flag).map(col): _*)
-  }
+  def kernel(): RecurrenceKernel = new CusumKernel(target, slack, threshold)
 
   override def toJson: JValue = JObj(Seq(
     "type" -> JStr("CusumDetector"),
     "target" -> Json.num(target),
     "slack" -> Json.num(slack),
     "threshold" -> Json.num(threshold)))
-
-  /** Segmented-scan evaluation for series too large for one partition
-    * (the `repartition(1)` case above, or a hot sensor dominating a
-    * fleet) — the CUSUM analog of [[EwmaDetector.detectChunked]].
-    *
-    * The recursion `s ← max(0, s + δ)` is MAX-PLUS affine in s:
-    * running a whole chunk with per-sample deviations δ₁..δₙ from entry
-    * state s gives `s_out = max(s + T, M)` with `T = Σδ` and
-    * `M = max(0, max nonempty suffix sum of δ)` — a transfer that
-    * composes associatively, exactly like the EWMA chunk's `A·s + B`.
-    * Three passes, all distributed:
-    *
-    *   1. per (series, time-bucket) chunk: one linear scan computing the
-    *      (T, M) transfer for BOTH sides (high and low deviations);
-    *   2. per series over the CHUNK SUMMARIES (rows = #chunks, tiny):
-    *      sequential composition → each chunk's entry (S⁺, S⁻);
-    *   3. per chunk: the ordinary seeded scan emits the flags.
-    *
-    * NOT bit-identical to [[detect]] in general: `s + T` reassociates
-    * the float additions the sequential scan interleaved with
-    * max-floors, so entry states can drift by ulps — a flag can differ
-    * only when a sum sits within that drift of `threshold` (the same
-    * documented contract as the EWMA chunked path). EXCEPTION — exact
-    * on a dyadic grid: when every value and hi/lo constant is a
-    * multiple of 2^-g and all running magnitudes stay below 2^(53-g),
-    * every add/subtract/max here is exact IEEE arithmetic, so the
-    * transfer composition is associative and chunked == sequential
-    * BITWISE. The driver query `det_cusum_chunked` runs on
-    * floor(value·64)/64 (g = 6) to get that guarantee; at n samples of
-    * magnitude ~2^m per series the bound holds while n < 2^(47-m).
-    */
-  def detectChunked(df: DataFrame, spec: SeriesSpec,
-      bucketSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    validate(df, spec)
-    val hiC = target + slack
-    val loC = target - slack
-    val thr = threshold
-    val C = "__cusum_chunk"
-    val tsu = unix_micros(col(spec.ts).cast(TimestampType))
-    val withV = df
-      .withColumn("__v", TsOps.cleanValue(spec))
-      .withColumn(C, floor(tsu / (bucketSeconds * 1000000L)).cast("long"))
-    val keyCols = spec.seriesId :+ C
-    val arranged = withV.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ spec.orderBy).map(col): _*)
-    val keyIdx = keyCols.map(arranged.schema.fieldIndex)
-    val vIdx = arranged.schema.fieldIndex("__v")
-
-    // ---- pass 1: chunk (T, M) transfers for both sides ---------------
-    val sumSchema = StructType(
-      keyCols.map(k => arranged.schema(arranged.schema.fieldIndex(k))) ++ Seq(
-        StructField("__THi", DoubleType, nullable = false),
-        StructField("__MHi", DoubleType, nullable = false),
-        StructField("__TLo", DoubleType, nullable = false),
-        StructField("__MLo", DoubleType, nullable = false)))
-    val sumEnc = org.apache.spark.sql.Encoders.row(sumSchema)
-    val summaries = arranged.mapPartitions({ rows =>
-      new Iterator[Row] {
-        private val it = rows.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          val key = keyIdx.map(it.head.get)
-          // running the chunk forward: s_out = max(s_in + T, M), where
-          // T/M update per non-null sample as T += δ; M = max(M + δ, 0)
-          // (M tracks the best "restart inside the chunk" state)
-          var tHi = 0.0; var mHi = 0.0
-          var tLo = 0.0; var mLo = 0.0
-          while (it.hasNext && keyIdx.map(it.head.get) == key) {
-            val r = it.next()
-            if (!r.isNullAt(vIdx)) {
-              val x = r.getDouble(vIdx)
-              tHi += x - hiC; mHi = math.max(mHi + (x - hiC), 0.0)
-              tLo += loC - x; mLo = math.max(mLo + (loC - x), 0.0)
-            }
-          }
-          Row.fromSeq(key ++ Seq(tHi, mHi, tLo, mLo))
-        }
-      }
-    }: Iterator[Row] => Iterator[Row])(sumEnc).toDF()
-
-    // ---- pass 2: compose transfers per series → chunk entry states ---
-    val sid = spec.seriesId
-    val sArranged =
-      (if (sid.isEmpty) summaries.repartition(1)
-       else summaries.repartition(sid.map(col): _*))
-        .sortWithinPartitions((sid :+ C).map(col): _*)
-    val stSchema = StructType(
-      keyCols.map(k => sumSchema(sumSchema.fieldIndex(k))) ++ Seq(
-        StructField("__sHiIn", DoubleType, nullable = false),
-        StructField("__sLoIn", DoubleType, nullable = false)))
-    val stEnc = org.apache.spark.sql.Encoders.row(stSchema)
-    val sKeyIdx = sid.map(sArranged.schema.fieldIndex)
-    val Seq(cIdx, thIdx, mhIdx, tlIdx, mlIdx) =
-      Seq(C, "__THi", "__MHi", "__TLo", "__MLo").map(sArranged.schema.fieldIndex)
-    val entries = sArranged.mapPartitions({ rows =>
-      var curKey: Seq[Any] = null
-      var sHi = 0.0
-      var sLo = 0.0
-      rows.map { r =>
-        val key = sKeyIdx.map(r.get)
-        if (key != curKey) { curKey = key; sHi = 0.0; sLo = 0.0 }
-        val (inHi, inLo) = (sHi, sLo)
-        sHi = math.max(sHi + r.getDouble(thIdx), r.getDouble(mhIdx))
-        sLo = math.max(sLo + r.getDouble(tlIdx), r.getDouble(mlIdx))
-        // Seq[Any], NOT Seq(...) — Scala's numeric unification would
-        // silently widen the long chunk id to Double next to the doubles
-        Row.fromSeq(key ++ Seq[Any](r.getLong(cIdx), inHi, inLo))
-      }
-    }: Iterator[Row] => Iterator[Row])(stEnc).toDF()
-
-    // ---- pass 3: seeded per-chunk scan emits the flags ---------------
-    val inCols = df.columns.toSeq
-    val joined = arranged.join(entries, keyCols)
-    val jArranged = joined.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ spec.orderBy).map(col): _*)
-    val outSchema = StructType(jArranged.schema.fields :+
-      StructField(spec.flag, BooleanType, nullable = false))
-    val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
-    val jKeyIdx = keyCols.map(jArranged.schema.fieldIndex)
-    val jvIdx = jArranged.schema.fieldIndex("__v")
-    val hiInIdx = jArranged.schema.fieldIndex("__sHiIn")
-    val loInIdx = jArranged.schema.fieldIndex("__sLoIn")
-    jArranged.mapPartitions({ rows =>
-      var curKey: Seq[Any] = null
-      var sHi = 0.0
-      var sLo = 0.0
-      rows.map { r =>
-        val key = jKeyIdx.map(r.get)
-        if (key != curKey) {
-          curKey = key
-          sHi = r.getDouble(hiInIdx)
-          sLo = r.getDouble(loInIdx)
-        }
-        val v: java.lang.Double = if (r.isNullAt(jvIdx)) null else r.getDouble(jvIdx)
-        var anomaly = false
-        if (v != null) {
-          sHi = math.max(0.0, sHi + v.doubleValue() - hiC)
-          sLo = math.max(0.0, sLo - v.doubleValue() + loC)
-          anomaly = sHi > thr || sLo > thr
-        }
-        Row.fromSeq(r.toSeq :+ anomaly)
-      }
-    }: Iterator[Row] => Iterator[Row])(outEnc).toDF()
-      .select((inCols :+ spec.flag).map(col): _*)
-  }
 }
 
 object CusumDetector {
   def fromJson(j: JValue): CusumDetector =
     CusumDetector(j("target").num, j("slack").num, j("threshold").num)
+}
+
+/** CUSUM arithmetic: state `(S⁺, S⁻)`, seeded at (0, 0) from the start;
+  * transfer `(T⁺, M⁺, T⁻, M⁻)` of `s ↦ max(s + T, M)` per side.
+  */
+final class CusumKernel(target: Double, slack: Double, thr: Double)
+    extends RecurrenceKernel {
+  private val hi = target + slack
+  private val lo = target - slack
+  private var sHi = 0.0
+  private var sLo = 0.0
+
+  def reset(): Unit = { sHi = 0.0; sLo = 0.0 }
+
+  def step(x: Double): Boolean = {
+    sHi = math.max(0.0, sHi + x - hi)
+    sLo = math.max(0.0, sLo - x + lo)
+    sHi > thr || sLo > thr
+  }
+
+  def seeded: Boolean = true
+  def save(): Array[Double] = Array(sHi, sLo)
+  def load(s: Array[Double]): Unit = { sHi = s(0); sLo = s(1) }
+
+  def identity: Array[Double] = Array(0.0, 0.0, 0.0, 0.0)
+
+  // T/M update per sample as T += δ; M = max(M + δ, 0) (M tracks the
+  // best "restart inside the chunk" state)
+  def absorb(t: Array[Double], x: Double): Unit = {
+    t(0) += x - hi; t(1) = math.max(t(1) + (x - hi), 0.0)
+    t(2) += lo - x; t(3) = math.max(t(3) + (lo - x), 0.0)
+  }
+
+  def transfer(t: Array[Double]): Unit = {
+    sHi = math.max(sHi + t(0), t(1))
+    sLo = math.max(sLo + t(2), t(3))
+  }
 }

@@ -1,8 +1,5 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import graft.util.Json
 import graft.util.Json._
 
@@ -13,197 +10,69 @@ import graft.util.Json._
   * `|x_t − ewma_{t-1}| > threshold` — a sample is anomalous when it
   * deviates from the smoothed forecast of its own history.
   *
-  * The recursion is not expressible as a Spark window frame, so this is
-  * the one detector on the imperative path (SURVEY.md's "(d)
-  * mapPartitions as a last resort"): repartition by series, sort within
-  * partitions by (series, time), then ONE linear scan per partition with
-  * O(1) state that resets on series change — the canonical stateful-scan
-  * shape that holds at any series count. Nulls pass through unflagged
-  * without updating the state; the first sample seeds the average and is
-  * never flagged.
+  * The recursion is not expressible as a Spark window frame, so, like
+  * [[HoltDetector]] and [[CusumDetector]], it runs as a
+  * [[RecurrenceKernel]] scanned once per series ([[Recurrence]]). Nulls
+  * pass through unflagged without updating the state; the first sample
+  * seeds the average and is never flagged.
   *
   * SCALE WARNING: with an empty `spec.seriesId` the whole frame is one
   * logical series, so `detect`'s scan necessarily runs in ONE partition
   * (`repartition(1)`) — an exactly-sequential recursion cannot
   * parallelize. For modest single-sensor frames that's fine; for a
   * giant series (or a hot sensor dominating a fleet) use
-  * [[detectChunked]], the distributed segmented-scan formulation
-  * (algebraically identical, ulp-level entry-state drift documented
-  * there).
+  * [[detectChunked]], the distributed segmented-scan formulation: the
+  * recursion `s ← α·x + (1−α)·s` is AFFINE in s, so a whole chunk
+  * composes to `s_out = A·s_in + B` with `A = (1−α)^(#non-null)` and B
+  * a chunk-local scan value. Composing `A·s + B` reassociates the float
+  * arithmetic, so entry states can drift by ulps and masks differ from
+  * [[detect]]'s as [[Recurrence.detectChunked]] describes (at α = 1
+  * every transfer is exact). Use [[detect]] when exact oracle parity
+  * matters; use [[detectChunked]] when one series holds billions of rows.
   */
 final case class EwmaDetector(
     alpha: Double = 0.3,
-    threshold: Double = Double.PositiveInfinity) extends Detector {
+    threshold: Double = Double.PositiveInfinity) extends RecursiveDetector {
 
   require(alpha > 0.0 && alpha <= 1.0, "alpha must be in (0, 1]")
 
-  override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame = {
-    val inCols = df.columns.toSeq
-    val withV = df.withColumn("__v", TsOps.cleanValue(spec))
-    val arranged =
-      (if (spec.seriesId.isEmpty) withV.repartition(1)
-       else withV.repartition(spec.seriesId.map(col): _*))
-        .sortWithinPartitions((spec.seriesId ++ spec.orderBy).map(col): _*)
-    val schema = StructType(arranged.schema.fields :+
-      StructField(spec.flag, BooleanType, nullable = false))
-    val keyIdx = spec.seriesId.map(arranged.schema.fieldIndex)
-    val vIdx = arranged.schema.fieldIndex("__v")
-    val a = alpha
-    val thr = threshold
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    arranged.mapPartitions { rows =>
-      var curKey: Seq[Any] = null
-      var ewma: java.lang.Double = null
-      rows.map { r =>
-        val key = keyIdx.map(r.get)
-        if (key != curKey) { curKey = key; ewma = null }
-        val v: java.lang.Double = if (r.isNullAt(vIdx)) null else r.getDouble(vIdx)
-        val anomaly = v != null && ewma != null &&
-          math.abs(v.doubleValue() - ewma.doubleValue()) > thr
-        if (v != null)
-          ewma = if (ewma == null) v
-            else java.lang.Double.valueOf(a * v + (1 - a) * ewma)
-        Row.fromSeq(r.toSeq :+ anomaly)
-      }
-    }.toDF().select((inCols :+ spec.flag).map(col): _*)
-  }
+  def kernel(): RecurrenceKernel = new EwmaKernel(alpha, threshold)
 
   override def toJson: JValue = JObj(Seq(
     "type" -> JStr("EwmaDetector"),
     "alpha" -> Json.num(alpha),
     "threshold" -> Json.num(threshold)))
-
-  /** Segmented-scan evaluation for series too large for one partition
-    * (the `repartition(1)` case above, or a hot sensor dominating a
-    * fleet): the recursion `s ← α·x + (1−α)·s` is AFFINE in s, so a
-    * whole chunk of rows composes to `s_out = A·s_in + B` with
-    * `A = (1−α)^(#non-null)` and B a chunk-local scan value. Three
-    * passes, all distributed:
-    *
-    *   1. per (series, time-bucket) chunk: one linear scan computing the
-    *      chunk's (A, B, B_seeded, n) transfer summary;
-    *   2. per series over the CHUNK SUMMARIES (rows = #chunks, tiny):
-    *      sequentially compose transfers → each chunk's entry state;
-    *   3. per chunk: the ordinary seeded scan emits the flags.
-    *
-    * NOT bit-identical to [[detect]]: composing `A·s + B` reassociates
-    * the float arithmetic, so entry states can drift by ulps from the
-    * sequential values — a flag can differ only for samples whose
-    * `|x − ewma|` sits within that drift of `threshold`. Use [[detect]]
-    * when exact oracle parity matters; use this when one series holds
-    * billions of rows.
-    */
-  def detectChunked(df: DataFrame, spec: SeriesSpec,
-      bucketSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    validate(df, spec)
-    val a = alpha
-    val thr = threshold
-    val C = "__ewma_chunk"
-    val tsu = unix_micros(col(spec.ts).cast(TimestampType))
-    val withV = df
-      .withColumn("__v", TsOps.cleanValue(spec))
-      .withColumn(C, floor(tsu / (bucketSeconds * 1000000L)).cast("long"))
-    val keyCols = spec.seriesId :+ C
-    val arranged = withV.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ spec.orderBy).map(col): _*)
-    val keyIdx = keyCols.map(arranged.schema.fieldIndex)
-    val vIdx = arranged.schema.fieldIndex("__v")
-
-    // ---- pass 1: chunk transfer summaries (one row per chunk) --------
-    val sumSchema = StructType(
-      keyCols.map(k => arranged.schema(arranged.schema.fieldIndex(k))) ++ Seq(
-        StructField("__A", DoubleType, nullable = false),
-        StructField("__B", DoubleType, nullable = false),
-        StructField("__BSeed", DoubleType, nullable = false),
-        StructField("__hasVal", BooleanType, nullable = false)))
-    val sumEnc = org.apache.spark.sql.Encoders.row(sumSchema)
-    val summaries = arranged.mapPartitions({ rows =>
-      new Iterator[Row] {
-        private val it = rows.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          val key = keyIdx.map(it.head.get)
-          var A = 1.0; var B = 0.0; var bSeed = 0.0
-          var seen = false
-          while (it.hasNext && keyIdx.map(it.head.get) == key) {
-            val r = it.next()
-            if (!r.isNullAt(vIdx)) {
-              val x = r.getDouble(vIdx)
-              A *= (1 - a)
-              B = a * x + (1 - a) * B
-              bSeed = if (!seen) x else a * x + (1 - a) * bSeed
-              seen = true
-            }
-          }
-          Row.fromSeq(key ++ Seq(A, B, bSeed, seen))
-        }
-      }
-    }: Iterator[Row] => Iterator[Row])(sumEnc).toDF()
-
-    // ---- pass 2: compose transfers per series → chunk entry states ---
-    val sid = spec.seriesId
-    val sArranged =
-      (if (sid.isEmpty) summaries.repartition(1)
-       else summaries.repartition(sid.map(col): _*))
-        .sortWithinPartitions((sid :+ C).map(col): _*)
-    val stSchema = StructType(
-      keyCols.map(k => sumSchema(sumSchema.fieldIndex(k))) :+
-        StructField("__sIn", DoubleType, nullable = true))
-    val stEnc = org.apache.spark.sql.Encoders.row(stSchema)
-    val sKeyIdx = sid.map(sArranged.schema.fieldIndex)
-    val Seq(cIdx, aIdx, bIdx, bsIdx, hvIdx) =
-      Seq(C, "__A", "__B", "__BSeed", "__hasVal").map(sArranged.schema.fieldIndex)
-    val entries = sArranged.mapPartitions({ rows =>
-      var curKey: Seq[Any] = null
-      var state: java.lang.Double = null
-      rows.map { r =>
-        val key = sKeyIdx.map(r.get)
-        if (key != curKey) { curKey = key; state = null }
-        val sIn = state
-        if (r.getBoolean(hvIdx))
-          state =
-            if (state == null) r.getDouble(bsIdx)
-            else r.getDouble(aIdx) * state + r.getDouble(bIdx)
-        Row.fromSeq(key ++ Seq(r.getLong(cIdx), sIn))
-      }
-    }: Iterator[Row] => Iterator[Row])(stEnc).toDF()
-
-    // ---- pass 3: seeded per-chunk scan emits the flags ---------------
-    val inCols = df.columns.toSeq
-    val joined = arranged.join(entries, keyCols)
-    val jArranged = joined.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ spec.orderBy).map(col): _*)
-    val outSchema = StructType(jArranged.schema.fields :+
-      StructField(spec.flag, BooleanType, nullable = false))
-    val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
-    val jKeyIdx = keyCols.map(jArranged.schema.fieldIndex)
-    val jvIdx = jArranged.schema.fieldIndex("__v")
-    val sInIdx = jArranged.schema.fieldIndex("__sIn")
-    jArranged.mapPartitions({ rows =>
-      var curKey: Seq[Any] = null
-      var ewma: java.lang.Double = null
-      rows.map { r =>
-        val key = jKeyIdx.map(r.get)
-        if (key != curKey) {
-          curKey = key
-          ewma = if (r.isNullAt(sInIdx)) null else r.getDouble(sInIdx)
-        }
-        val v: java.lang.Double = if (r.isNullAt(jvIdx)) null else r.getDouble(jvIdx)
-        val anomaly = v != null && ewma != null &&
-          math.abs(v.doubleValue() - ewma.doubleValue()) > thr
-        if (v != null)
-          ewma = if (ewma == null) v
-            else java.lang.Double.valueOf(a * v + (1 - a) * ewma)
-        Row.fromSeq(r.toSeq :+ anomaly)
-      }
-    }: Iterator[Row] => Iterator[Row])(outEnc).toDF()
-      .select((inCols :+ spec.flag).map(col): _*)
-  }
 }
 
 object EwmaDetector {
   def fromJson(j: JValue): EwmaDetector =
     EwmaDetector(j("alpha").num, j("threshold").num)
+}
+
+/** EWMA arithmetic: state `ewma`; transfer `(A, B)` of `s ↦ A·s + B`. */
+final class EwmaKernel(a: Double, thr: Double) extends RecurrenceKernel {
+  private var ewma = 0.0
+  private var seen = false
+
+  def reset(): Unit = { ewma = 0.0; seen = false }
+
+  def step(x: Double): Boolean = {
+    val anomaly = seen && math.abs(x - ewma) > thr
+    ewma = if (!seen) x else a * x + (1 - a) * ewma
+    seen = true
+    anomaly
+  }
+
+  def seeded: Boolean = seen
+  def save(): Array[Double] = Array(ewma)
+  def load(s: Array[Double]): Unit = { ewma = s(0); seen = true }
+
+  def identity: Array[Double] = Array(1.0, 0.0)
+
+  def absorb(t: Array[Double], x: Double): Unit = {
+    t(0) *= (1 - a)
+    t(1) = a * x + (1 - a) * t(1)
+  }
+
+  def transfer(t: Array[Double]): Unit = ewma = t(0) * ewma + t(1)
 }

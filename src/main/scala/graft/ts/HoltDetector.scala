@@ -1,8 +1,5 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import graft.util.Json
 import graft.util.Json._
 
@@ -18,232 +15,89 @@ import graft.util.Json._
   * EWMA lags and flags every sample; Holt's trend term follows the ramp
   * and flags only genuine departures from it.
   *
-  * Same imperative path as EWMA (the recursion has no window-frame
-  * form): repartition by series, sort within partitions, one linear
-  * scan with O(2 doubles) state resetting on series change. The first
-  * non-null sample seeds `s = x, b = 0` and is never flagged; nulls
-  * pass through unflagged without touching the state. Same
-  * single-series SCALE WARNING as [[EwmaDetector]]: empty
-  * `spec.seriesId` means one partition; the streaming form
-  * ([[graft.streaming.StreamingDetectors.holtStream]]) carries the
-  * identical arithmetic with O(1) state.
+  * It runs as a [[RecurrenceKernel]] like EWMA's, with two doubles of
+  * state and the same single-series SCALE WARNING. The first non-null
+  * sample seeds `s = x, b = 0` and is never flagged.
+  *
+  * [[detectChunked]], the segmented scan for giant series, uses the
+  * 2×2-matrix generalization of EWMA's scalar transfer. Each non-null
+  * step is AFFINE in the (level, trend) state:
+  *
+  *   [s'; b'] = M·[s; b] + x·u,   M = [[1−α, 1−α],
+  *                                     [−αβ, β(1−α)+1−β]],  u = [α, αβ]
+  *
+  * so a whole chunk composes to `state_out = T·state_in + w` with T a
+  * 2×2 product and w an accumulated vector. As for EWMA, the composition
+  * reassociates the float arithmetic, so entry states can drift by ulps
+  * (at α = 1, β = 0 every transfer is exact).
   */
 final case class HoltDetector(
     alpha: Double = 0.3,
     beta: Double = 0.1,
-    threshold: Double = Double.PositiveInfinity) extends Detector {
+    threshold: Double = Double.PositiveInfinity) extends RecursiveDetector {
 
   require(alpha > 0.0 && alpha <= 1.0, "alpha must be in (0, 1]")
   require(beta >= 0.0 && beta <= 1.0, "beta must be in [0, 1]")
 
-  override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame = {
-    val inCols = df.columns.toSeq
-    val withV = df.withColumn("__v", TsOps.cleanValue(spec))
-    val arranged =
-      (if (spec.seriesId.isEmpty) withV.repartition(1)
-       else withV.repartition(spec.seriesId.map(col): _*))
-        .sortWithinPartitions((spec.seriesId ++ spec.orderBy).map(col): _*)
-    val schema = StructType(arranged.schema.fields :+
-      StructField(spec.flag, BooleanType, nullable = false))
-    val keyIdx = spec.seriesId.map(arranged.schema.fieldIndex)
-    val vIdx = arranged.schema.fieldIndex("__v")
-    val a = alpha
-    val be = beta
-    val thr = threshold
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    arranged.mapPartitions { rows =>
-      var curKey: Seq[Any] = null
-      var seeded = false
-      var s = 0.0
-      var b = 0.0
-      rows.map { r =>
-        val key = keyIdx.map(r.get)
-        if (key != curKey) { curKey = key; seeded = false; s = 0.0; b = 0.0 }
-        val v: java.lang.Double = if (r.isNullAt(vIdx)) null else r.getDouble(vIdx)
-        val anomaly = v != null && seeded &&
-          math.abs(v.doubleValue() - (s + b)) > thr
-        if (v != null) {
-          if (!seeded) { s = v.doubleValue(); b = 0.0; seeded = true }
-          else {
-            val s1 = a * v.doubleValue() + (1 - a) * (s + b)
-            b = be * (s1 - s) + (1 - be) * b
-            s = s1
-          }
-        }
-        Row.fromSeq(r.toSeq :+ anomaly)
-      }
-    }.toDF().select((inCols :+ spec.flag).map(col): _*)
-  }
+  def kernel(): RecurrenceKernel = new HoltKernel(alpha, beta, threshold)
 
   override def toJson: JValue = JObj(Seq(
     "type" -> JStr("HoltDetector"),
     "alpha" -> Json.num(alpha),
     "beta" -> Json.num(beta),
     "threshold" -> Json.num(threshold)))
-
-  /** Segmented-scan evaluation for series too large for one partition —
-    * the 2×2-matrix generalization of [[EwmaDetector.detectChunked]]'s
-    * scalar transfer. Each non-null step is AFFINE in the (level,
-    * trend) state:
-    *
-    *   [s'; b'] = M·[s; b] + x·u,   M = [[1−α, 1−α],
-    *                                     [−αβ, β(1−α)+1−β]],  u = [α, αβ]
-    *
-    * so a whole chunk composes to `state_out = T·state_in + w` with T a
-    * 2×2 product and w an accumulated vector — the same three
-    * distributed passes as EWMA (chunk summaries → per-series compose
-    * over the tiny summary frame → seeded per-chunk scan). Chunks also
-    * carry the self-seeded state for the series-starts-here case. Like
-    * the EWMA form this is NOT bit-identical to [[detect]]: matrix
-    * composition reassociates the float arithmetic, so entry states
-    * drift by ulps and a flag can differ only when |x − forecast| sits
-    * within that drift of `threshold`.
-    */
-  def detectChunked(df: DataFrame, spec: SeriesSpec,
-      bucketSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    validate(df, spec)
-    val a = alpha
-    val be = beta
-    val thr = threshold
-    val C = "__holt_chunk"
-    val tsu = unix_micros(col(spec.ts).cast(TimestampType))
-    val withV = df
-      .withColumn("__v", TsOps.cleanValue(spec))
-      .withColumn(C, floor(tsu / (bucketSeconds * 1000000L)).cast("long"))
-    val keyCols = spec.seriesId :+ C
-    val arranged = withV.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ spec.orderBy).map(col): _*)
-    val keyIdx = keyCols.map(arranged.schema.fieldIndex)
-    val vIdx = arranged.schema.fieldIndex("__v")
-    // the per-step map constants
-    val m11 = 1 - a; val m12 = 1 - a
-    val m21 = -a * be; val m22 = be * (1 - a) + (1 - be)
-    val u1 = a; val u2 = a * be
-
-    // ---- pass 1: chunk transfer summaries (one row per chunk) --------
-    val sumFields = Seq("__T11", "__T12", "__T21", "__T22", "__W1", "__W2",
-      "__SSeed", "__BSeed")
-    val sumSchema = StructType(
-      keyCols.map(k => arranged.schema(arranged.schema.fieldIndex(k))) ++
-        sumFields.map(StructField(_, DoubleType, nullable = false)) :+
-        StructField("__hasVal", BooleanType, nullable = false))
-    val sumEnc = org.apache.spark.sql.Encoders.row(sumSchema)
-    val summaries = arranged.mapPartitions({ rows =>
-      new Iterator[Row] {
-        private val it = rows.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          val key = keyIdx.map(it.head.get)
-          // T = identity, w = 0
-          var t11 = 1.0; var t12 = 0.0; var t21 = 0.0; var t22 = 1.0
-          var w1 = 0.0; var w2 = 0.0
-          var sS = 0.0; var bS = 0.0
-          var seen = false
-          while (it.hasNext && keyIdx.map(it.head.get) == key) {
-            val r = it.next()
-            if (!r.isNullAt(vIdx)) {
-              val x = r.getDouble(vIdx)
-              // T ← M·T, w ← M·w + x·u
-              val n11 = m11 * t11 + m12 * t21; val n12 = m11 * t12 + m12 * t22
-              val n21 = m21 * t11 + m22 * t21; val n22 = m21 * t12 + m22 * t22
-              t11 = n11; t12 = n12; t21 = n21; t22 = n22
-              val v1 = m11 * w1 + m12 * w2 + x * u1
-              val v2 = m21 * w1 + m22 * w2 + x * u2
-              w1 = v1; w2 = v2
-              // self-seeded state (series begins inside this chunk)
-              if (!seen) { sS = x; bS = 0.0; seen = true }
-              else {
-                val s1 = a * x + (1 - a) * (sS + bS)
-                bS = be * (s1 - sS) + (1 - be) * bS
-                sS = s1
-              }
-            }
-          }
-          Row.fromSeq(key ++ Seq(t11, t12, t21, t22, w1, w2, sS, bS, seen))
-        }
-      }
-    }: Iterator[Row] => Iterator[Row])(sumEnc).toDF()
-
-    // ---- pass 2: compose transfers per series → chunk entry states ---
-    val sid = spec.seriesId
-    val sArranged =
-      (if (sid.isEmpty) summaries.repartition(1)
-       else summaries.repartition(sid.map(col): _*))
-        .sortWithinPartitions((sid :+ C).map(col): _*)
-    val stSchema = StructType(
-      keyCols.map(k => sumSchema(sumSchema.fieldIndex(k))) ++ Seq(
-        StructField("__sIn", DoubleType, nullable = true),
-        StructField("__bIn", DoubleType, nullable = true)))
-    val stEnc = org.apache.spark.sql.Encoders.row(stSchema)
-    val sKeyIdx = sid.map(sArranged.schema.fieldIndex)
-    val idx = (Seq(C, "__hasVal") ++ sumFields).map(sArranged.schema.fieldIndex)
-    val Seq(cIdx, hvIdx, i11, i12, i21, i22, iw1, iw2, isS, ibS) = idx
-    val entries = sArranged.mapPartitions({ rows =>
-      var curKey: Seq[Any] = null
-      var seeded = false
-      var s = 0.0; var b = 0.0
-      rows.map { r =>
-        val key = sKeyIdx.map(r.get)
-        if (key != curKey) { curKey = key; seeded = false; s = 0.0; b = 0.0 }
-        val sIn: java.lang.Double = if (seeded) s else null
-        val bIn: java.lang.Double = if (seeded) b else null
-        if (r.getBoolean(hvIdx)) {
-          if (!seeded) { s = r.getDouble(isS); b = r.getDouble(ibS); seeded = true }
-          else {
-            val ns = r.getDouble(i11) * s + r.getDouble(i12) * b + r.getDouble(iw1)
-            val nb = r.getDouble(i21) * s + r.getDouble(i22) * b + r.getDouble(iw2)
-            s = ns; b = nb
-          }
-        }
-        Row.fromSeq(key ++ Seq(r.getLong(cIdx), sIn, bIn))
-      }
-    }: Iterator[Row] => Iterator[Row])(stEnc).toDF()
-
-    // ---- pass 3: seeded per-chunk scan emits the flags ---------------
-    val inCols = df.columns.toSeq
-    val joined = arranged.join(entries, keyCols)
-    val jArranged = joined.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ spec.orderBy).map(col): _*)
-    val outSchema = StructType(jArranged.schema.fields :+
-      StructField(spec.flag, BooleanType, nullable = false))
-    val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
-    val jKeyIdx = keyCols.map(jArranged.schema.fieldIndex)
-    val jvIdx = jArranged.schema.fieldIndex("__v")
-    val sInIdx = jArranged.schema.fieldIndex("__sIn")
-    val bInIdx = jArranged.schema.fieldIndex("__bIn")
-    jArranged.mapPartitions({ rows =>
-      var curKey: Seq[Any] = null
-      var seeded = false
-      var s = 0.0; var b = 0.0
-      rows.map { r =>
-        val key = jKeyIdx.map(r.get)
-        if (key != curKey) {
-          curKey = key
-          seeded = !r.isNullAt(sInIdx)
-          s = if (seeded) r.getDouble(sInIdx) else 0.0
-          b = if (seeded) r.getDouble(bInIdx) else 0.0
-        }
-        val v: java.lang.Double = if (r.isNullAt(jvIdx)) null else r.getDouble(jvIdx)
-        val anomaly = v != null && seeded &&
-          math.abs(v.doubleValue() - (s + b)) > thr
-        if (v != null) {
-          if (!seeded) { s = v.doubleValue(); b = 0.0; seeded = true }
-          else {
-            val s1 = a * v.doubleValue() + (1 - a) * (s + b)
-            b = be * (s1 - s) + (1 - be) * b
-            s = s1
-          }
-        }
-        Row.fromSeq(r.toSeq :+ anomaly)
-      }
-    }: Iterator[Row] => Iterator[Row])(outEnc).toDF()
-      .select((inCols :+ spec.flag).map(col): _*)
-  }
 }
 
 object HoltDetector {
   def fromJson(j: JValue): HoltDetector =
     HoltDetector(j("alpha").num, j("beta").num, j("threshold").num)
+}
+
+/** Holt arithmetic: state `(s, b)`; transfer `(T11, T12, T21, T22, w1,
+  * w2)` of `state ↦ T·state + w`.
+  */
+final class HoltKernel(a: Double, be: Double, thr: Double)
+    extends RecurrenceKernel {
+  // the per-step map constants
+  private val m11 = 1 - a; private val m12 = 1 - a
+  private val m21 = -a * be; private val m22 = be * (1 - a) + (1 - be)
+  private val u1 = a; private val u2 = a * be
+  private var s = 0.0
+  private var b = 0.0
+  private var seen = false
+
+  def reset(): Unit = { s = 0.0; b = 0.0; seen = false }
+
+  def step(x: Double): Boolean = {
+    val anomaly = seen && math.abs(x - (s + b)) > thr
+    if (!seen) { s = x; b = 0.0; seen = true }
+    else {
+      val s1 = a * x + (1 - a) * (s + b)
+      b = be * (s1 - s) + (1 - be) * b
+      s = s1
+    }
+    anomaly
+  }
+
+  def seeded: Boolean = seen
+  def save(): Array[Double] = Array(s, b)
+  def load(st: Array[Double]): Unit = { s = st(0); b = st(1); seen = true }
+
+  def identity: Array[Double] = Array(1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
+
+  // T ← M·T, w ← M·w + x·u
+  def absorb(t: Array[Double], x: Double): Unit = {
+    val n11 = m11 * t(0) + m12 * t(2); val n12 = m11 * t(1) + m12 * t(3)
+    val n21 = m21 * t(0) + m22 * t(2); val n22 = m21 * t(1) + m22 * t(3)
+    t(0) = n11; t(1) = n12; t(2) = n21; t(3) = n22
+    val v1 = m11 * t(4) + m12 * t(5) + x * u1
+    val v2 = m21 * t(4) + m22 * t(5) + x * u2
+    t(4) = v1; t(5) = v2
+  }
+
+  def transfer(t: Array[Double]): Unit = {
+    val ns = t(0) * s + t(1) * b + t(4)
+    val nb = t(2) * s + t(3) * b + t(5)
+    s = ns; b = nb
+  }
 }
