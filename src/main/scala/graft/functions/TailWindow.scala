@@ -36,6 +36,10 @@ final class TailRing(val capacity: Int, keepSorted: Boolean) {
   /** True when the ring holds `capacity` rows and none is null. */
   def full: Boolean = size == capacity && nulls == 0
 
+  /** The i-th retained row, oldest first (`0 <= i < size`). */
+  def valueAt(i: Int): Double = values(start + i)
+  def isNullAt(i: Int): Boolean = isNull(start + i)
+
   def push(v: Double, vIsNull: Boolean): Unit = {
     if (size == capacity) {
       if (isNull(start)) nulls -= 1 else if (keepSorted) removeSorted(values(start))
@@ -153,40 +157,12 @@ case class TailHampel(
   override protected def keepSorted: Boolean = true
   override def dataType: DataType = HampelStats.OutType
 
-  override def eval(buf: TailRing): Any = {
-    val m = buf.sortedSize
-    if (m == 0) return null
-    val a = buf.sorted
-    val med = HampelStats.medianOfSorted(a, m)
-    val rawmad =
-      if (med.isNaN || med.isInfinite) {
-        val dev = new Array[Double](m)
-        var i = 0
-        while (i < m) { dev(i) = math.abs(a(i) - med); i += 1 }
-        java.util.Arrays.sort(dev)
-        HampelStats.medianOfSorted(dev, m)
-      } else {
-        // a(0 until h) <= med <= a(h until m); merge ranks 0..h
-        val h = m / 2
-        var lo = h - 1
-        var hi = h
-        var prev = 0.0
-        var cur = 0.0
-        var rank = 0
-        while (rank <= h) {
-          prev = cur
-          if (hi >= m || (lo >= 0 && java.lang.Double.compare(
-              math.abs(a(lo) - med), math.abs(a(hi) - med)) <= 0)) {
-            cur = math.abs(a(lo) - med); lo -= 1
-          } else {
-            cur = math.abs(a(hi) - med); hi += 1
-          }
-          rank += 1
-        }
-        if (m % 2 == 1) cur else (prev + cur) / 2.0
-      }
-    new GenericInternalRow(Array[Any](med, rawmad))
-  }
+  override def eval(buf: TailRing): Any =
+    if (buf.sortedSize == 0) null
+    else {
+      val med = TailHampel.median(buf)
+      new GenericInternalRow(Array[Any](med, TailHampel.rawMad(buf, med)))
+    }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TailHampel =
     copy(mutableAggBufferOffset = newOffset)
@@ -198,6 +174,43 @@ case class TailHampel(
 }
 
 object TailHampel {
+  /** Median of the ring's non-null rows, read from its sorted copy; the
+    * ring keeps one and holds a non-null row. */
+  def median(ring: TailRing): Double =
+    HampelStats.medianOfSorted(ring.sorted, ring.sortedSize)
+
+  /** Median of `|a_i - med|` over the ring's non-null rows `a_i`. */
+  def rawMad(ring: TailRing, med: Double): Double = {
+    val m = ring.sortedSize
+    val a = ring.sorted
+    if (med.isNaN || med.isInfinite) {
+      val dev = new Array[Double](m)
+      var i = 0
+      while (i < m) { dev(i) = math.abs(a(i) - med); i += 1 }
+      java.util.Arrays.sort(dev)
+      HampelStats.medianOfSorted(dev, m)
+    } else {
+      // a(0 until h) <= med <= a(h until m); merge ranks 0..h
+      val h = m / 2
+      var lo = h - 1
+      var hi = h
+      var prev = 0.0
+      var cur = 0.0
+      var rank = 0
+      while (rank <= h) {
+        prev = cur
+        if (hi >= m || (lo >= 0 && java.lang.Double.compare(
+            math.abs(a(lo) - med), math.abs(a(hi) - med)) <= 0)) {
+          cur = math.abs(a(lo) - med); lo -= 1
+        } else {
+          cur = math.abs(a(hi) - med); hi += 1
+        }
+        rank += 1
+      }
+      if (m % 2 == 1) cur else (prev + cur) / 2.0
+    }
+  }
+
   /** `struct(med, rawmad)` of the last `n` rows, usable `.over(frame)`. */
   def apply(v: Column, n: Int): Column =
     ColumnBridge.column(
@@ -222,9 +235,7 @@ case class TailStd(
   override protected def keepSorted: Boolean = false
   override def dataType: DataType = DoubleType
 
-  override def eval(buf: TailRing): Any =
-    if (!buf.full || (n == 1 && nullOnDivideByZero)) null
-    else TailStd.stddevSamp(buf.values, buf.start, n)
+  override def eval(buf: TailRing): Any = TailStd.guarded(buf, nullOnDivideByZero)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TailStd =
     copy(mutableAggBufferOffset = newOffset)
@@ -236,25 +247,28 @@ case class TailStd(
 }
 
 object TailStd {
-  /** Sample stddev of `xs(from until from + count)` by Spark's
-    * `CentralMomentAgg` update `(n, avg, m2)` in index order; NaN for
-    * `count = 1` (the legacy divide-by-zero value). */
-  def stddevSamp(xs: Array[Double], from: Int, count: Int): Double = {
-    var n = 0.0
-    var avg = 0.0
-    var m2 = 0.0
-    var i = from
-    while (i < from + count) {
-      val newN = n + 1.0
-      val delta = xs(i) - avg
-      val deltaN = delta / newN
-      avg = avg + deltaN
-      m2 = m2 + delta * (delta - deltaN)
-      n = newN
-      i += 1
+  /** Sample stddev of the ring's rows by Spark's `CentralMomentAgg` update
+    * `(n, avg, m2)` in push order; null unless the ring is full, and for
+    * a one-row ring null, or NaN (the legacy divide-by-zero value) where
+    * `nullOnDivideByZero` is false. */
+  def guarded(ring: TailRing, nullOnDivideByZero: Boolean): java.lang.Double =
+    if (!ring.full || (ring.capacity == 1 && nullOnDivideByZero)) null
+    else {
+      var n = 0.0
+      var avg = 0.0
+      var m2 = 0.0
+      var i = 0
+      while (i < ring.capacity) {
+        val newN = n + 1.0
+        val delta = ring.valueAt(i) - avg
+        val deltaN = delta / newN
+        avg = avg + deltaN
+        m2 = m2 + delta * (delta - deltaN)
+        n = newN
+        i += 1
+      }
+      math.sqrt(m2 / (n - 1.0))
     }
-    math.sqrt(m2 / (n - 1.0))
-  }
 
   /** Guarded sample stddev of the last `n` rows, usable `.over(frame)`. */
   def apply(v: Column, n: Int): Column =

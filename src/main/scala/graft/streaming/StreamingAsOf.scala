@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import StreamingDetectors.micros
 
 /** Streaming counterpart of [[graft.relational.AsOf]]: enrich a stream
   * of left events with the latest right-stream row at-or-before each
@@ -46,9 +47,6 @@ object StreamingAsOf {
 
   // public: the state encoder's generated code constructs/reads it
   final case class RightState(ts: Timestamp, rid: Long, value: Double)
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
 
   /** `toleranceMicros`: as in the batch operator, a match farther than
     * this before the left event is no match (emitted with nulls).

@@ -1,9 +1,12 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.{TailHampel, TailRing, TailStd}
 import graft.ts.{CusumKernel, EwmaKernel, HoltKernel, RangeDetector, RecurrenceKernel, SeriesSpec}
 
 /** Structured Streaming variants of the detectors whose semantics permit
@@ -15,18 +18,21 @@ import graft.ts.{CusumKernel, EwmaKernel, HoltKernel, RangeDetector, RecurrenceK
   *  - Diff/Gradient need exactly the previous sample: keyed
   *    `flatMapGroupsWithState` holds one (ts, value) per series — O(1)
   *    state per key, append-mode output.
-  *  - Centered-window detectors (rolling-std, Hampel, constant-value/
-  *    -gradient) need future rows: a buffer of context and pending rows in
-  *    the same state pattern emits each row once its lookahead has
-  *    arrived (or on an end-of-series marker).
+  *  - Rolling-std, Hampel and constant-value/-gradient are
+  *    [[WindowKernel]]s of one bounded-lookahead stream ([[windowStream]])
+  *    over the batch kernels' [[graft.functions.TailRing]]: a row is
+  *    flagged once enough rows follow it, or at an end-of-series marker,
+  *    which hands the series' length to the batch edge rules.
   *  - EWMA, Holt and CUSUM run the batch detectors' own
   *    [[graft.ts.RecurrenceKernel]]s ([[recurrenceStream]]).
   *
+  * NaN is read as null, as the batch `TsOps.cleanValue` does, and flags
+  * compare as Spark SQL does (`compareDoubles`: NaN above every value).
   * Contract: rows are processed in event-time order WITHIN each
   * micro-batch (sorted here) and batches must arrive in order per series
-  * (no late data) — one (ts,value) of state cannot repair reordering.
-  * Fitting stays a batch concern: fit offline, pass the fitted detector
-  * (a literal threshold) into the stream.
+  * (no late data) — the state cannot repair reordering. Fitting stays a
+  * batch concern: fit offline, pass the fitted detector (a literal
+  * threshold) into the stream.
   */
 object StreamingDetectors {
 
@@ -37,14 +43,18 @@ object StreamingDetectors {
 
   /** Input for the bounded-lookahead detectors: a normal sample, or an
     * end-of-series marker (`eos = true`, value ignored) that flushes the
-    * pending tail rows — flushed rows get `false` flags, exactly the
-    * batch edge semantics (incomplete frames / tail masking).
+    * pending tail rows under the batch edge rules; a sample after it
+    * starts a new series.
     */
   final case class StreamEvent(
       series_id: String, ts: Timestamp, value: java.lang.Double, eos: Boolean)
 
+  /** A windowed stream's per-series state: its kernel's ring
+    * ([[TailRing.toBytes]]), the rows not yet emitted as event-time micros
+    * and values (NaN for null), and the number of rows emitted.
+    */
   final case class WindowState(
-      rows: Seq[(Long, Option[Double])], pendingFrom: Int, emitted: Long)
+      ring: Array[Byte], micros: Array[Long], values: Array[Double], emitted: Long)
 
   /** Stateless: same Catalyst expression as the batch detector. */
   def rangeStream(stream: DataFrame, detector: RangeDetector,
@@ -89,50 +99,45 @@ object StreamingDetectors {
       }
   }
 
-  /** Centered rolling-stddev detector on a stream: emits row t once
-    * `lookahead` future rows exist (or on eos), computing the same
-    * guarded sample-stddev flag as the batch
-    * [[graft.ts.RollingStdDevDetector]], with the batch kernel's
-    * arithmetic ([[graft.functions.TailStd.stddevSamp]]), so the two agree
-    * to the bit even where the stddev equals `maxStd` — verified
-    * mask-identical in StreamingSpec.
+  /** Rolling-stddev detector on a stream: the batch
+    * [[graft.ts.RollingStdDevDetector]]'s [[graft.functions.TailStd]] of
+    * the `windowSize` rows ending ⌊(w-1)/2⌋ rows past t (centered) or at
+    * t, and its edge rules.
     */
   def rollingStdStream(events: Dataset[StreamEvent], windowSize: Int,
       maxStd: Double, center: Boolean = true): Dataset[FlaggedPoint] = {
-    val (back, ahead) =
-      if (center) (windowSize / 2, (windowSize - 1) / 2)
-      else (windowSize - 1, 0)
-    slidingWindowStream(events, back, ahead, gate = ahead) {
-      (win, centerIdx, rn, _) =>
-        val vals = win.flatMap(_._2)
-        rn != 1 && vals.length == windowSize &&
-          graft.functions.TailStd.stddevSamp(vals.toArray, 0, windowSize) > maxStd
-    }
+    val lookahead = if (center) (windowSize - 1) / 2 else 0
+    // for a one-row window, as the batch column reads it when built
+    val nullOnDivideByZero = !SQLConf.get.legacyStatisticalAggregate
+    windowStream(events, new WindowKernel(windowSize, keepSorted = false, lookahead, lookahead) {
+      def flag(ring: TailRing, t: Long, total: Long): Boolean =
+        t != 1 && t <= total - ahead && {
+          val std = TailStd.guarded(ring, nullOnDivideByZero)
+          std != null && compareDoubles(std, maxStd) > 0
+        }
+    })
   }
 
-  /** Hampel detector on a stream. The batch tail rule (`rn ≤ cnt - ws`)
-    * needs to know whether ws rows FOLLOW t, so emission gates on ws
-    * future rows even though the frame only spans ws-1 ahead; eos
-    * flushes the tail as false — again exactly the batch masks.
+  /** Hampel detector on a stream: the batch [[graft.ts.HampelDetector]]'s
+    * [[graft.functions.TailHampel]] median and MAD of rows `[t-ws,
+    * t+ws-1]`. Its tail rule (`rn ≤ cnt - ws`) needs to know whether ws
+    * rows FOLLOW t, so a row waits for ws rows although its frame ends
+    * ws-1 past it.
     */
   def hampelStream(events: Dataset[StreamEvent], windowSize: Int,
       threshold: Double,
       k: Double = graft.ts.TsOps.GaussianScaleFactor): Dataset[FlaggedPoint] = {
     val ws = windowSize
-    slidingWindowStream(events, back = ws, ahead = ws - 1, gate = ws) {
-      (win, centerIdx, rn, _) =>
-        rn > ws && {
-          val vals = win.flatMap(_._2) // frame [t-ws, t+ws-1] includes row t
-          val x = win(centerIdx)._2
-          x.isDefined && vals.nonEmpty && {
-            val sorted = vals.sorted.toArray
-            val med = graft.functions.HampelStats.medianOfSorted(sorted)
-            val dev = sorted.map(v => math.abs(v - med)).sorted
-            val mad = k * graft.functions.HampelStats.medianOfSorted(dev)
-            math.abs(x.get - med) > threshold * mad
+    windowStream(events, new WindowKernel(2 * ws, keepSorted = true, ws - 1, ws) {
+      def flag(ring: TailRing, t: Long, total: Long): Boolean =
+        t > ws && t <= total - ws && {
+          val x = rowField(ring, t + ahead, t, 1, 0)
+          !x.isNaN && {
+            val med = TailHampel.median(ring)
+            compareDoubles(math.abs(x - med), threshold * (k * TailHampel.rawMad(ring, med))) > 0
           }
         }
-    }
+    })
   }
 
   /** EWMA, Holt and CUSUM on a stream: the batch detectors' kernels
@@ -180,167 +185,167 @@ object StreamingDetectors {
   }
 
   /** Flat-line (stuck-sensor) detection on a stream — the batch
-    * [[graft.ts.ConstantValueDetector]] semantics (centered max-min
-    * spread < threshold, complete NaN-free frames only, first/last row
-    * forced false, then one-step dilation) with bounded lookahead. The
-    * dilation needs the NEXT row's base flag, whose frame spans one row
-    * past this row's own — hence lookahead `⌊(w-1)/2⌋ + 1`. Emission at
-    * eos still evaluates (a dilated flag can land on the final rows),
-    * with the now-known series length driving the last-row rule.
+    * [[graft.ts.ConstantValueDetector]]: [[constantMask]] of the values.
+    * The dilation reads the frames of t-1, t and t+1, the w + 2 rows
+    * ending ⌊(w-1)/2⌋ + 1 past t; for w ≤ 2 a row also waits for the
+    * row after that, which shows t+1 is not the last.
     */
   def constantValueStream(events: Dataset[StreamEvent], windowSize: Int = 3,
       threshold: Double = 1e-7): Dataset[FlaggedPoint] = {
     val w = windowSize
-    // for w ≤ 2 the base frame never clips at the tail, so the last-row
-    // rule needs one extra row of lookahead to know "next is not last"
-    val ahead = math.max((w - 1) / 2, 1) + 1
-    slidingWindowStream(cleanNaN(events), back = w / 2 + 1, ahead, gate = ahead,
-      evalOnEos = true) { (win, centerIdx, rn, total) =>
-      val vals = win.map(_._2)
-      def base(j: Int): Boolean =
-        constantBase(vals, j, rn + (j - centerIdx), total, w, threshold)
-      base(centerIdx - 1) || base(centerIdx) || base(centerIdx + 1)
-    }
+    windowStream(events, new WindowKernel(w + 2, keepSorted = false,
+        (w - 1) / 2 + 1, math.max((w - 1) / 2, 1) + 1) {
+      def flag(ring: TailRing, t: Long, total: Long): Boolean = {
+        val last = math.min(t + ahead, total)
+        constantMask(t, total, w, threshold)(r => rowField(ring, last, r, 1, 0))
+      }
+    })
   }
 
   /** Linear-interpolation (constant-gradient) detection on a stream —
-    * the batch [[graft.ts.ConstantGradientDetector]]: the constant-mask
-    * pipeline applied to BOTH the forward per-second gradient and the
-    * backward difference over the forward Δt (the reference's
-    * `base.py:89` idiosyncrasy), OR-combined. Gradients are derived
-    * inside the window, so lookahead grows by one more row (the
-    * backward gradient at the frame's tail needs its successor).
+    * the batch [[graft.ts.ConstantGradientDetector]]: [[constantMask]] of
+    * the forward per-second gradient OR of the backward difference over
+    * the forward Δt (the reference's `base.py:89` idiosyncrasy). The ring
+    * holds (value, Δt) pairs of the w + 4 rows ending ⌊(w-1)/2⌋ + 2 past
+    * t, as a gradient reads the rows either side of it.
     */
   def constantGradientStream(events: Dataset[StreamEvent], windowSize: Int = 3)
       : Dataset[FlaggedPoint] = {
     val w = windowSize
     val threshold = 1e-7
-    val ahead = math.max((w - 1) / 2, 1) + 2
-    slidingWindowStream(cleanNaN(events), back = w / 2 + 2, ahead, gate = ahead,
-      evalOnEos = true) { (win, centerIdx, rn, total) =>
-      val n = win.length
-      // win(0) with rn > 1 is a context row whose predecessor was
-      // trimmed — its gradient is never inside an evaluated frame
-      // (back = w/2 + 2 keeps one spare row of slack), so None is safe
-      def grad(j: Int, backward: Boolean): Option[Double] =
-        if (j < 1 || j >= n) None
-        else {
-          val dt = (win(j)._1 - win(j - 1)._1) / 1e6
-          for {
-            x <- win(j)._2
-            y <- if (backward) { if (j + 1 < n) win(j + 1)._2 else None }
-                 else win(j - 1)._2
-            // batch Divide yields null on a zero divisor (duplicate ts)
-            if dt != 0.0
-          } yield (x - y) / dt
-        }
-      val gF = IndexedSeq.tabulate(n)(j => grad(j, backward = false))
-      val gB = IndexedSeq.tabulate(n)(j => grad(j, backward = true))
-      def base(vals: IndexedSeq[Option[Double]], j: Int): Boolean =
-        constantBase(vals, j, rn + (j - centerIdx), total, w, threshold)
-      def dilated(vals: IndexedSeq[Option[Double]]): Boolean =
-        base(vals, centerIdx - 1) || base(vals, centerIdx) ||
-          base(vals, centerIdx + 1)
-      dilated(gF) || dilated(gB)
-    }
-  }
-
-  /** The batch constant-mask base flag for window position j (series
-    * position rnj): centered frame `[j-⌊w/2⌋, j+⌊(w-1)/2⌋]` must hold
-    * exactly w rows (a frame clipped by a series edge can never flag),
-    * all non-null, with max-min spread under the threshold; the first
-    * and last rows of the series are forced false. `total` is known
-    * only during an eos flush — during gated emission the successor's
-    * presence already proves a row is not last.
-    */
-  private def constantBase(vals: IndexedSeq[Option[Double]], j: Int, rnj: Long,
-      total: Option[Long], w: Int, threshold: Double): Boolean =
-    j >= 0 && j < vals.length && rnj != 1 && !total.contains(rnj) && {
-      val frame = (j - w / 2) to (j + (w - 1) / 2)
-      frame.forall(i => i >= 0 && i < vals.length && vals(i).isDefined) && {
-        val xs = frame.map(i => vals(i).get)
-        math.abs(xs.max - xs.min) < threshold
+    val lookahead = (w - 1) / 2 + 2
+    windowStream(events, new WindowKernel(2 * (w + 4), keepSorted = false, lookahead, lookahead) {
+      override def push(ring: TailRing, micros: Array[Long], values: Array[Double],
+          i: Int, first: Boolean): Unit = {
+        ring.push(values(i), values(i).isNaN)
+        // batch Δt is null at the series' head; a zero Δt (a duplicate
+        // ts) gives a null gradient, as Divide does outside ANSI mode
+        val dt = if (first) 0.0 else (micros(i) - micros(i - 1)) / 1e6
+        ring.push(dt, dt == 0.0)
       }
-    }
-
-  /** NaN behaves as null in every batch detector (TsOps.cleanValue);
-    * mirror that before windowing.
-    */
-  private def cleanNaN(events: Dataset[StreamEvent]): Dataset[StreamEvent] = {
-    import events.sparkSession.implicits._
-    events.map(e =>
-      if (e.value != null && e.value.isNaN) e.copy(value = null) else e)
+      def flag(ring: TailRing, t: Long, total: Long): Boolean = {
+        val last = math.min(t + ahead, total)
+        def grad(r: Long, other: Long): Double =
+          (rowField(ring, last, r, 2, 0) - rowField(ring, last, other, 2, 0)) /
+            rowField(ring, last, r, 2, 1)
+        constantMask(t, total, w, threshold)(r => grad(r, r - 1)) ||
+          constantMask(t, total, w, threshold)(r => grad(r, r + 1))
+      }
+    })
   }
 
-  /** Shared bounded-lookahead machinery: per-series state keeps `back`
-    * context rows plus the pending suffix; a pending row emits once
-    * `gate` rows exist after it (or on eos — flushed rows get `false`
-    * flags unless `evalOnEos`, in which case the callback still runs
-    * with the window clipped at the true series end). The flag callback
-    * sees the window `[idx-back, idx+ahead]` (clipped at the head), the
-    * row's index within it, its 1-based position rn, and — during an
-    * eos flush only — the series' total row count (for batch semantics
-    * that force the LAST row, like the constant detectors' edge rule).
+  /** A windowed detector on a stream. Row t's frame is the last
+    * `ringLength` ring rows up to `ahead` rows past t, as the batch
+    * detector's growing frame reads them; t is flagged once `gate ≥ ahead`
+    * rows follow it, or at end-of-series.
     */
-  private def slidingWindowStream(events: Dataset[StreamEvent],
-      back: Int, ahead: Int, gate: Int, evalOnEos: Boolean = false)(
-      flag: (IndexedSeq[(Long, Option[Double])], Int, Long, Option[Long]) => Boolean)
+  private[streaming] abstract class WindowKernel(val ringLength: Int,
+      val keepSorted: Boolean, val ahead: Int, val gate: Int) extends Serializable {
+
+    /** Pushes pending row i; row i - 1 precedes it unless it is the
+      * series' `first`. A kernel whose push reads row i - 1 needs
+      * `ahead ≥ 1`, which keeps that row pending. */
+    def push(ring: TailRing, micros: Array[Long], values: Array[Double],
+        i: Int, first: Boolean): Unit =
+      ring.push(values(i), values(i).isNaN)
+
+    /** Row t's flag (1-based). The ring ends at row `min(t + ahead,
+      * total)`; `total` is the series' row count at end-of-series and
+      * `Long.MaxValue` before, so the batch edge rules read it as is. */
+    def flag(ring: TailRing, t: Long, total: Long): Boolean
+  }
+
+  /** Field `field` of series row r, in a ring of `stride`-wide rows whose
+    * newest is row `last`; NaN where that row is absent or the field null. */
+  private def rowField(ring: TailRing, last: Long, r: Long, stride: Int, field: Int): Double = {
+    val i = ring.size - stride * (last - r + 1) + field
+    if (r > last || i < 0 || ring.isNullAt(i.toInt)) Double.NaN else ring.valueAt(i.toInt)
+  }
+
+  /** The batch `TsOps.constantMask` at row t over a sequence g (NaN for
+    * null): base(j) holds iff j is neither the first nor the last row and
+    * g is non-null over j's centered w-row frame, with max-min spread
+    * under the threshold; t is flagged iff base(t-1), base(t) or
+    * base(t+1) holds (the one-step dilation).
+    */
+  private def constantMask(t: Long, total: Long, w: Int, threshold: Double)(
+      g: Long => Double): Boolean = {
+    def base(j: Long): Boolean = j > 1 && j < total && {
+      val end = j + (w - 1) / 2
+      var lo = Double.PositiveInfinity
+      var hi = Double.NegativeInfinity
+      var r = j - w / 2
+      var x = 0.0
+      while (r <= end && { x = g(r); !x.isNaN }) {
+        lo = math.min(lo, x); hi = math.max(hi, x); r += 1
+      }
+      r > end && compareDoubles(math.abs(hi - lo), threshold) < 0
+    }
+    base(t - 1) || base(t) || base(t + 1)
+  }
+
+  /** Runs a [[WindowKernel]] per series. The ring holds the rows up to
+    * `min(emitted + ahead, received)`, so emitting row t first pushes row
+    * t + ahead, where it exists.
+    */
+  private def windowStream(events: Dataset[StreamEvent], kernel: WindowKernel)
       : Dataset[FlaggedPoint] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.series_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, batch: Iterator[StreamEvent], state: GroupState[WindowState]) =>
           val evs = batch.toVector.sortBy(e => (micros(e.ts), !e.eos))
-          val st = state.getOption.getOrElse(WindowState(Vector.empty, 0, 0L))
-          var rows = st.rows.toVector
-          var pendingFrom = st.pendingFrom
+          def newRing = new TailRing(kernel.ringLength, kernel.keepSorted)
+          val st = state.getOption.getOrElse(
+            WindowState(newRing.toBytes, Array.emptyLongArray, Array.emptyDoubleArray, 0L))
+          var ring = TailRing.fromBytes(kernel.ringLength, kernel.keepSorted, st.ring)
+          // the pending rows are ms/vs(head until len)
+          val ms = java.util.Arrays.copyOf(st.micros, st.micros.length + evs.length)
+          val vs = java.util.Arrays.copyOf(st.values, ms.length)
+          var head = 0
+          var len = st.micros.length
           var emitted = st.emitted
           val out = Vector.newBuilder[FlaggedPoint]
-          var flushed = false
 
-          def emitUpTo(isEos: Boolean): Unit = {
-            // invariant under emission: emitted and pendingFrom advance
-            // together, so the series total is loop-constant
-            val total =
-              if (isEos) Some(emitted + rows.length - pendingFrom) else None
-            while (pendingFrom < rows.length &&
-              (isEos || rows.length - 1 - pendingFrom >= gate)) {
-              val idx = pendingFrom
-              val lo = math.max(0, idx - back)
-              val win = rows.slice(lo, math.min(rows.length, idx + ahead + 1))
-              val rn = emitted + 1
-              val isAnomaly =
-                if (isEos && !evalOnEos) false
-                else flag(win, idx - lo, rn, total)
-              val (tsm, v) = rows(idx)
-              out += FlaggedPoint(key, new Timestamp(tsm / 1000L),
-                v.map(Double.box).orNull, isAnomaly)
-              emitted += 1
-              pendingFrom += 1
-            }
-            // trim context no longer needed
-            val keepFrom = math.max(0, pendingFrom - back)
-            if (keepFrom > 0) {
-              rows = rows.drop(keepFrom)
-              pendingFrom -= keepFrom
-            }
+          def push(i: Int): Unit =
+            kernel.push(ring, ms, vs, i, first = emitted + i - head == 0)
+          def emit(total: Long): Unit = {
+            if (head + kernel.ahead < len) push(head + kernel.ahead)
+            emitted += 1
+            out += FlaggedPoint(key, timestamp(ms(head)),
+              if (vs(head).isNaN) null else vs(head), kernel.flag(ring, emitted, total))
+            head += 1
           }
 
           evs.foreach { e =>
-            if (e.eos) { emitUpTo(isEos = true); flushed = true }
-            else {
-              rows = rows :+ (micros(e.ts) -> Option(e.value).map(_.doubleValue()))
-              emitUpTo(isEos = false)
+            if (e.eos) {
+              val total = emitted + len - head
+              while (head < len) emit(total)
+              ring = newRing
+              emitted = 0
+            } else {
+              ms(len) = micros(e.ts)
+              vs(len) = if (e.value == null) Double.NaN else e.value.doubleValue
+              len += 1
+              if (len - head <= kernel.ahead) push(len - 1)
+              while (len - head > kernel.gate) emit(Long.MaxValue)
             }
           }
-          if (flushed && pendingFrom >= rows.length) state.remove()
-          else state.update(WindowState(rows, pendingFrom, emitted))
+          if (emitted == 0 && head == len) state.remove()
+          else state.update(WindowState(ring.toBytes,
+            java.util.Arrays.copyOfRange(ms, head, len),
+            java.util.Arrays.copyOfRange(vs, head, len), emitted))
           out.result().iterator
       }
   }
 
-  private def micros(ts: Timestamp): Long =
+  /** Event-time microseconds of a timestamp. */
+  private[streaming] def micros(ts: Timestamp): Long =
     ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
+
+  /** The timestamp at event-time microseconds `m`. */
+  private[streaming] def timestamp(m: Long): Timestamp = Timestamp.from(
+    Instant.ofEpochSecond(Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L))
 
   // ---- streaming sessionization ---------------------------------------
 
@@ -406,7 +411,7 @@ object StreamingDetectors {
     out.iterator
   }
 
-  private def flagged(direction: String, threshold: Double)(
+  private[streaming] def flagged(direction: String, threshold: Double)(
       delta: Option[Double]): Boolean = delta match {
     case None => false
     case Some(d) => direction match {

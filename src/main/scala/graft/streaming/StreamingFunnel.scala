@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import StreamingDetectors.micros
 
 /** Streaming ordered-funnel tracking — the continuous twin of the batch
   * `q33_funnel` query: per user, each funnel stage counts only once the
@@ -21,9 +22,6 @@ object StreamingFunnel {
   case class FunnelEvent(user_id: Long, ts: Timestamp, event_type: String)
   case class FunnelAdvance(user_id: Long, stage: String, ts: Timestamp)
   case class FunnelState(stageIdx: Int, reachedMicros: Long)
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
 
   def funnelStream(events: Dataset[FunnelEvent], stages: Seq[String])
       : Dataset[FunnelAdvance] = {

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import StreamingDetectors.StreamEvent
+import StreamingDetectors.{StreamEvent, micros}
 
 /** Streaming counterpart of [[graft.ts.Interpolate]]: fill NULL
   * readings linearly in time between their non-null neighbors while
@@ -31,9 +31,6 @@ object StreamingInterpolate {
   final case class InterpState(
       hasPrev: Boolean, prevTs: Long, prevVal: Double,
       pending: Seq[Timestamp])
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
 
   def interpolateStream(events: Dataset[StreamEvent],
       maxGapMicros: Option[Long] = None): Dataset[InterpolatedPoint] = {

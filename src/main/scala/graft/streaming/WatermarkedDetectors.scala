@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import StreamingDetectors.{FlaggedPoint, Point}
+import StreamingDetectors.{FlaggedPoint, Point, flagged, micros, timestamp}
 
 /** Out-of-order-tolerant streaming detection (SURVEY.md §2.10's "late
   * data" caveat made concrete): per-series state buffers points and only
@@ -48,28 +47,14 @@ object WatermarkedDetectors {
           val (ready, pending) = buffered.partition(_._1 <= horizon)
           var prev = st.lastScored
           val out = ready.map { case (tsm, v) =>
-            val anomaly = prev != null && flagDiff(direction, maxDiff, prev.value, v)
+            val anomaly = prev != null && flagged(direction, maxDiff)(
+              for (pv <- Option(prev.value); cv <- Option(v)) yield cv - pv)
             prev = StreamingDetectors.LastPoint(tsm, v)
-            FlaggedPoint(key, new Timestamp(tsm / 1000L), v, anomaly)
+            FlaggedPoint(key, timestamp(tsm), v, anomaly)
           }
           val frontier = if (ready.nonEmpty) ready.last._1 else st.frontierMicros
           state.update(LatenessState(pending, prev, frontier, maxSeen))
           out.iterator
       }
   }
-
-  private def flagDiff(direction: String, maxDiff: Double,
-      prev: java.lang.Double, cur: java.lang.Double): Boolean =
-    if (prev == null || cur == null) false
-    else {
-      val d = cur.doubleValue() - prev.doubleValue()
-      direction match {
-        case "positive" => d > maxDiff
-        case "negative" => d < -maxDiff
-        case _ => math.abs(d) > maxDiff
-      }
-    }
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
 }

@@ -117,6 +117,18 @@ class StreamingSpec extends SparkSpecBase {
     assert(got == want)
   }
 
+  test("hampelStream and rollingStdStream read NaN as null, like the batch detectors") {
+    // the NaN at row 6 lies in the spike's Hampel window: counted in the
+    // median and MAD, it would leave row 8 unflagged
+    val pts = (0 until 16).map(i => Point("a", ts(i),
+      if (i == 6) Double.NaN else if (i == 8) 12.0 else i.toDouble))
+    val want = batchMask(HampelDetector(3, 1.0), pts)
+    assert(want(("a", ts(8))))
+    assert(runWindowedStream(pts, splitAt = 7)(ds => hampelStream(ds, 3, 1.0)) == want)
+    assert(runWindowedStream(pts, splitAt = 7)(ds => rollingStdStream(ds, 4, 2.0)) ==
+      batchMask(RollingStdDevDetector(4, 2.0), pts))
+  }
+
   test("ewmaStream matches batch EwmaDetector across micro-batch boundaries") {
     val pts = (0 until 14).map(i => Point("a", ts(i),
       if (i == 6) 80.0 else if (i == 10) null else i.toDouble)) ++ seriesB
