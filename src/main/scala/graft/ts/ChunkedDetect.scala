@@ -67,6 +67,12 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
   *     altogether. Margins too small never break correctness —
   *     they just leave series unchunked.
   *
+  * A small input (its plan's size estimate at or below AQE's minimum
+  * partition size, [[TsOps.small]]) skips all of this: [[detect]] returns
+  * `det.detect(df, spec)`, which runs in one partition, so there is no
+  * straggler to split and the masks are the unchunked ones by
+  * construction.
+  *
   * At 100 TB this is the difference between a stage bounded by the
   * largest sensor and one bounded by `bucketSeconds` of any sensor. Pick
   * `bucketSeconds` so a hot sensor's bucket holds ~10⁵-10⁶ rows, and
@@ -98,7 +104,9 @@ object ChunkedDetect {
     require(margin > 0 && margin <= bucketSeconds,
       "marginSeconds must be in (0, bucketSeconds]")
     val m = det.contextRows
-    if (m <= 0) return det.detect(df, spec)
+    // a small input runs in one partition (Detector.detect), where no
+    // straggler is left to split: no census, no key join, no chunk exchange
+    if (m <= 0 || TsOps.small(df)) return det.detect(df, spec)
 
     val sid = spec.seriesId
     val bMicros = bucketSeconds * 1000000L

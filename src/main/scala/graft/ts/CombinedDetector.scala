@@ -11,6 +11,8 @@ import graft.util.Json._
   * appends its flag column to ONE DataFrame and the final flag is their
   * disjunction — a single Catalyst plan, so compatible window specs share
   * one sort/exchange and the whole ensemble is one pass over the data.
+  * The ensemble places its input once ([[Detector.detect]]) for all of its
+  * members: one exchange above the small-input bound, none below.
   *
   * Scala's `Seq` niceties mirror the reference's `Sequence` protocol:
   * `apply(i)`, `length`, iteration via `detectors`.
@@ -28,7 +30,7 @@ final case class CombinedDetector(detectors: Seq[Detector]) extends Detector {
   override protected def detectImpl(df: DataFrame, spec: SeriesSpec): DataFrame = {
     val tmpFlags = detectors.indices.map(i => s"__combined_flag_$i")
     val withAll = detectors.zip(tmpFlags).foldLeft(df) { case (acc, (d, f)) =>
-      d.detect(acc, spec.copy(flag = f))
+      d.detectUnplaced(acc, spec.copy(flag = f))
     }
     withAll
       .withColumn(spec.flag, tmpFlags.map(col).reduce(_ || _))

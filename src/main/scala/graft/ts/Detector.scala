@@ -22,8 +22,23 @@ trait Detector extends Serializable {
 
   /** Append the anomaly-mask column `spec.flag`. Lazy: builds one Catalyst
     * plan, no action is triggered.
+    *
+    * The input is placed once: a small one (its plan's size estimate at
+    * or below AQE's minimum partition size, [[TsOps.small]]) runs in one
+    * partition with no shuffle, so the series window and a caller's
+    * global aggregate add no exchange; a larger one is left as it is,
+    * and the series window plans its one exchange by series. Masks are
+    * the same either way.
     */
   final def detect(df: DataFrame, spec: SeriesSpec = SeriesSpec()): DataFrame = {
+    validate(df, spec)
+    detectImpl(TsOps.place(df), spec)
+  }
+
+  /** [[detect]] without placing the input: for an ensemble's members,
+    * whose input the ensemble placed once for all of them.
+    */
+  private[ts] final def detectUnplaced(df: DataFrame, spec: SeriesSpec): DataFrame = {
     validate(df, spec)
     detectImpl(df, spec)
   }

@@ -13,9 +13,25 @@ import org.apache.spark.sql.functions._
   *
   * Semantics per series match the corresponding global fit exactly
   * (same quantile / signed-max / max-abs-gradient rules, null handling
-  * included).
+  * included). Rows whose series id is null form one series, as in
+  * `groupBy`: the thresholds join back null-safe.
+  *
+  * `train` and `data` are each placed like a detector's input
+  * ([[Detector.detect]]): a small frame runs in one partition, so the
+  * per-series fit and the series window add no exchange.
   */
 object PerSeriesFit {
+
+  /** `data` left-joined with `fitted` (the series ids first, then the
+    * thresholds) null-safe on the series ids; keeps `data`'s columns in
+    * order, then the thresholds.
+    */
+  private def withFit(data: DataFrame, fitted: DataFrame, sid: Seq[String]): DataFrame = {
+    val keys = sid.indices.map(i => s"__fit_k$i")
+    val f = fitted.toDF(keys ++ fitted.columns.drop(sid.length): _*)
+    val on = sid.zip(keys).map { case (s, k) => col(s) <=> col(k) }
+    data.join(f, on.reduceOption(_ && _).getOrElse(lit(true)), "left").drop(keys: _*)
+  }
 
   /** RangeDetector per series: thresholds = exact quantiles of each
     * series' values (default (0,1) = min/max, `detectors.py:104-119`).
@@ -24,13 +40,13 @@ object PerSeriesFit {
       quantiles: (Double, Double) = (0.0, 1.0),
       spec: SeriesSpec = SeriesSpec()): DataFrame = {
     val v = TsOps.cleanValue(spec)
-    val fitted = train.groupBy(spec.seriesId.map(col): _*)
+    val fitted = TsOps.place(train).groupBy(spec.seriesId.map(col): _*)
       .agg(percentile(v, lit(quantiles._1)).as("__lo"),
         percentile(v, lit(quantiles._2)).as("__hi"))
       .withColumn("__min", least(col("__lo"), col("__hi")))
       .withColumn("__max", greatest(col("__lo"), col("__hi")))
       .select(spec.seriesId.map(col) :+ col("__min") :+ col("__max"): _*)
-    data.join(fitted, spec.seriesId, "left")
+    withFit(TsOps.place(data), fitted, spec.seriesId)
       .withColumn(spec.flag,
         coalesce(v < col("__min") || v > col("__max"), lit(false)))
       .drop("__min", "__max")
@@ -45,7 +61,7 @@ object PerSeriesFit {
     Directions.check(direction)
     val v = TsOps.cleanValue(spec)
     val d = v - lag(v, 1).over(spec.w)
-    val fitted = train.withColumn("__d", d)
+    val fitted = TsOps.place(train).withColumn("__d", d)
       .groupBy(spec.seriesId.map(col): _*)
       .agg(max(col("__d")).as("__max_diff"))
       .select(spec.seriesId.map(col) :+ col("__max_diff"): _*)
@@ -55,7 +71,7 @@ object PerSeriesFit {
       case "positive" => dd > col("__max_diff")
       case "negative" => dd < -col("__max_diff")
     }
-    data.join(fitted, spec.seriesId, "left")
+    withFit(TsOps.place(data), fitted, spec.seriesId)
       .withColumn(spec.flag, coalesce(cond, lit(false)))
       .drop("__max_diff")
   }
@@ -73,11 +89,11 @@ object PerSeriesFit {
       spec: SeriesSpec = SeriesSpec(), roundTo: Int = -1): DataFrame = {
     val rawMax = max(col("__s"))
     val trainStd = RollingStdDevDetector.rollingStd(spec, windowSize, center = false)
-    val fitted = train.select(spec.seriesId.map(col) :+ trainStd.as("__s"): _*)
+    val fitted = TsOps.place(train).select(spec.seriesId.map(col) :+ trainStd.as("__s"): _*)
       .groupBy(spec.seriesId.map(col): _*)
       .agg((if (roundTo >= 0) round(rawMax, roundTo) else rawMax).as("__max_std"))
     val std = RollingStdDevDetector.rollingStd(spec, windowSize, center)
-    data.join(fitted, spec.seriesId, "left")
+    withFit(TsOps.place(data), fitted, spec.seriesId)
       .withColumn(spec.flag,
         coalesce(std > col("__max_std"), lit(false)) && row_number().over(spec.w) =!= 1)
       .drop("__max_std")
@@ -90,7 +106,7 @@ object PerSeriesFit {
       direction: String = "both",
       spec: SeriesSpec = SeriesSpec()): DataFrame = {
     Directions.check(direction)
-    val fitted = train.withColumn("__g", abs(TsOps.gradient(spec)))
+    val fitted = TsOps.place(train).withColumn("__g", abs(TsOps.gradient(spec)))
       .groupBy(spec.seriesId.map(col): _*)
       .agg(max(col("__g")).as("__max_grad"))
       .select(spec.seriesId.map(col) :+ col("__max_grad"): _*)
@@ -100,7 +116,7 @@ object PerSeriesFit {
       case "positive" => g > col("__max_grad")
       case "negative" => g < -col("__max_grad")
     }
-    data.join(fitted, spec.seriesId, "left")
+    withFit(TsOps.place(data), fitted, spec.seriesId)
       .withColumn(spec.flag, coalesce(cond, lit(false)))
       .drop("__max_grad")
   }

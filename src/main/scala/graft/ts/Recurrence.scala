@@ -68,16 +68,21 @@ object Recurrence {
   private def tCols(n: Int) = (0 until n).map(i => s"__t$i")
   private def sCols(n: Int) = (0 until n).map(i => s"__s$i")
 
-  /** One scan per series. With an empty `spec.seriesId` the whole frame
-    * is one series and the scan runs in ONE partition.
+  /** One scan per series. A small input ([[TsOps.small]]) is scanned in
+    * one partition with no shuffle; a larger one is repartitioned by
+    * series, or, with an empty `spec.seriesId` (the whole frame one
+    * series), shuffled into ONE partition.
     */
   def detect(df: DataFrame, spec: SeriesSpec,
       kernel: () => RecurrenceKernel): DataFrame = {
     val sid = spec.seriesId
-    val withV = df.withColumn(V, TsOps.cleanValue(spec))
+    def withV(d: DataFrame) = d.withColumn(V, TsOps.cleanValue(spec))
     val arranged =
-      (if (sid.isEmpty) withV.repartition(1)
-       else withV.repartition(sid.map(col): _*))
+      // coalesced before the value column is added, so that it collapses
+      // into the coalesce of Detector.detect's placement
+      (if (TsOps.small(df)) withV(df.coalesce(1))
+       else if (sid.isEmpty) withV(df).repartition(1)
+       else withV(df).repartition(sid.map(col): _*))
         .sortWithinPartitions((sid ++ spec.orderBy).map(col): _*)
     scan(arranged, sid, spec.flag, kernel, entryWidth = 0)
       .select((df.columns.toSeq :+ spec.flag).map(col): _*)

@@ -3,6 +3,7 @@ package graft.ts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, TimestampType}
 
 /** Shared window-expression building blocks for the detectors. All pandas
@@ -51,6 +52,29 @@ private[graft] object TsOps {
     if (d.isPosInfinity) "inf"
     else if (d.isNegInfinity) "-inf"
     else String.format(java.util.Locale.ROOT, "%.1e", Double.box(d))
+
+  /** True when `df` runs best in one partition: its optimized plan's
+    * size estimate is at or below AQE's minimum partition size
+    * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`) with
+    * partition coalescing on. Below that size AQE coalesces a shuffle's
+    * output into one partition anyway, so an exchange by series only adds
+    * a stage and a job — the window-side counterpart of a broadcast join,
+    * trusting the same estimate. Reads plan statistics only and starts no
+    * job; a stream is never small.
+    */
+  def small(df: DataFrame): Boolean = !df.isStreaming && {
+    val conf = df.sparkSession.sessionState.conf
+    conf.adaptiveExecutionEnabled && conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED) &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+  }
+
+  /** `df` in one partition, without a shuffle, when it is [[small]]:
+    * a clustered or all-tuples requirement above it (a series window, a
+    * grouping, a global aggregate) then needs no exchange. Otherwise
+    * `df` unchanged.
+    */
+  def place(df: DataFrame): DataFrame = if (small(df)) df.coalesce(1) else df
 
   /** Value column with NaN mapped to null. Canonical ingest is NaN → NULL
     * (SURVEY.md §1.2), but this makes every detector NaN-safe regardless:

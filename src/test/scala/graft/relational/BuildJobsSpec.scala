@@ -5,13 +5,15 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.graftbridge.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import graft.pipeline.Dedup
 import graft.ts._
 
 /** Building a plan starts no Spark job the plan itself does not need:
   * stored parquet is read with its schema taken from one footer on the
-  * driver, never by Spark's one-task inference job, and ChunkedDetect
-  * decides its chunks with ONE census action.
+  * driver, never by Spark's one-task inference job; a detector places
+  * its input from plan statistics alone; and ChunkedDetect decides its
+  * chunks with ONE census action above the small-input bound, none below.
   */
 class BuildJobsSpec extends SparkSpecBase {
 
@@ -36,13 +38,10 @@ class BuildJobsSpec extends SparkSpecBase {
     started.asScala.toSeq
   }
 
-  test("building Tables.load and every det_* entry starts no job beyond its own actions") {
-    assert(jobsOf(graft.Tables.load(spark, sfDir, "events")).isEmpty)
-    // the three global fits collect their threshold and the chunked
-    // ensemble collects its census, each in one SQL execution; every
-    // other entry builds without touching the data
-    val actions = Map("det_range_fit" -> 1, "det_diff_fit" -> 1,
-      "det_rolling_std_fit" -> 1, "det_combined_chunked" -> 1)
+  /** Builds every det_* entry: each starts jobs in `actions(name)` SQL
+    * executions (0 when absent), none outside one.
+    */
+  private def detEntries(actions: Map[String, Int]): Unit =
     for ((name, build) <- DetectorQueries.queries.toSeq.sortBy(_._1)) {
       val jobs = jobsOf(build(spark, sfDir))
       assert(jobs.forall(_.isDefined),
@@ -50,9 +49,22 @@ class BuildJobsSpec extends SparkSpecBase {
       assert(jobs.flatten.distinct.size == actions.getOrElse(name, 0),
         s"$name started ${jobs.size} jobs in ${jobs.flatten.distinct.size} executions")
     }
+
+  // the three global fits collect their threshold, each in one SQL
+  // execution; every other entry builds without touching the data
+  private val fits = Map("det_range_fit" -> 1, "det_diff_fit" -> 1, "det_rolling_std_fit" -> 1)
+
+  testAboveSmallBound("building Tables.load and every det_* entry starts no job beyond its own actions") {
+    assert(jobsOf(graft.Tables.load(spark, sfDir, "events")).isEmpty)
+    // above the small-input bound the chunked ensemble collects its census
+    detEntries(fits + ("det_combined_chunked" -> 1))
   }
 
-  test("building ChunkedDetect.detect starts exactly one census action") {
+  test("below the small-input bound every det_* entry starts only its fit's action: no census") {
+    detEntries(fits)
+  }
+
+  testAboveSmallBound("building ChunkedDetect.detect starts exactly one census action") {
     val df = stackedDf(Seq(loadGolden("walk"), loadGolden("quant_train"))).cache()
     df.count()
     val jobs = jobsOf(ChunkedDetect.detect(HampelDetector(5, 3), df,
@@ -60,6 +72,41 @@ class BuildJobsSpec extends SparkSpecBase {
     assert(jobs.nonEmpty && jobs.forall(_.isDefined))
     assert(jobs.flatten.distinct.size == 1, s"census ran as ${jobs.flatten.distinct}")
     df.unpersist()
+  }
+
+  test("building any detector over a persisted frame starts no job beyond the census: placement reads plan statistics only") {
+    val df = stackedDf(Seq(loadGolden("walk"), loadGolden("quant_train"))).persist()
+    df.count()
+    val spec = SeriesSpec(seriesId = Seq("sid"))
+    val windowed = CombinedDetector(Seq(RangeDetector(0, 2), DiffDetector(0.5),
+      HampelDetector(5, 3)))
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "range" -> (() => RangeDetector(0, 2).detect(df, spec)),
+      "diff" -> (() => DiffDetector(0.5).detect(df, spec)),
+      "gradient" -> (() => GradientDetector(1e-4).detect(df, spec)),
+      "rolling_std" -> (() => RollingStdDevDetector(4, 0.5).detect(df, spec)),
+      "hampel" -> (() => HampelDetector(5, 3).detect(df, spec)),
+      "constant_value" -> (() => ConstantValueDetector(3, 1e-4).detect(df, spec)),
+      "constant_gradient" -> (() => ConstantGradientDetector(3).detect(df, spec)),
+      "ewma" -> (() => EwmaDetector(0.3, 3.0).detect(df, spec)),
+      "holt" -> (() => HoltDetector(0.5, 0.3, 3.0).detect(df, spec)),
+      "cusum" -> (() => CusumDetector(0.0, 0.5, 3.0).detect(df, spec)),
+      "ensemble" -> (() => CombinedDetector(windowed.detectors :+
+        CusumDetector(0.0, 0.5, 3.0)).detect(df, spec)),
+      "per_series_range" -> (() => PerSeriesFit.rangeDetect(df, df, spec = spec)),
+      "per_series_rolling_std" -> (() => PerSeriesFit.rollingStdDetect(df, df, 4, spec = spec)),
+      "chunked" -> (() => ChunkedDetect.detect(windowed, df, spec, 24 * 3600L)))
+    try {
+      assert(TsOps.small(df))
+      for ((name, build) <- builds) {
+        // above the bound the chunked ensemble collects its census
+        val above = aboveSmallBound(jobsOf(build())).flatten.distinct.size
+        assert(above == (if (name == "chunked") 1 else 0),
+          s"building $name above the bound started jobs in $above executions")
+        val below = jobsOf(build())
+        assert(below.isEmpty, s"building $name below the bound started ${below.size} job(s)")
+      }
+    } finally df.unpersist()
   }
 
   test("loading a 3-file exact index starts no schema-inference job") {

@@ -5,7 +5,11 @@ import graft.ts.SparkSpecBase
 /** Physical-plan regression pins: the properties below are the load-
   * bearing scale claims of the engine (single exchange per detector
   * ensemble, parquet pushdown), so a future edit that silently regresses
-  * one fails here rather than at cluster scale.
+  * one fails here rather than at cluster scale. The detector plans are
+  * pinned on both sides of the small-input bound: the large-input plan
+  * with the bound pinned below the frame's size
+  * ([[graft.ts.SparkSpecBase.aboveSmallBound]]), the one-partition plan
+  * at the default conf.
   */
 class PlanShapeSpec extends SparkSpecBase {
 
@@ -14,20 +18,33 @@ class PlanShapeSpec extends SparkSpecBase {
   private def countOccurrences(plan: String, token: String): Int =
     plan.sliding(token.length).count(_ == token)
 
-  test("det_combined ensemble runs in ONE exchange + ONE sort (single-pass plan)") {
+  /** det_combined's plan: `exchanges` Exchange nodes and ONE sort. */
+  private def detCombinedPlan(exchanges: Int): Unit = {
     val df = graft.SparkEntry.queries("det_combined")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     // every detector in the ensemble shares the (series_id, ts) window
     // spec, so Catalyst collapses all masks into one Window over one
     // shuffle — the property that makes a 100-detector ensemble cost the
     // same shuffle as a single detector
-    val exchanges = countOccurrences(plan, "Exchange ")
+    val got = countOccurrences(plan, "Exchange ")
     val sorts = countOccurrences(plan, "+- Sort ") + (if (plan.startsWith("Sort ")) 1 else 0)
-    assert(exchanges == 1, s"expected 1 Exchange, got $exchanges:\n$plan")
+    assert(got == exchanges, s"expected $exchanges Exchange, got $got:\n$plan")
     assert(sorts == 1, s"expected 1 Sort, got $sorts:\n$plan")
   }
 
-  test("Hampel, rolling-std and a 3-member ensemble over a persisted frame: ONE exchange + ONE sort, no sliding aggregate frame") {
+  testAboveSmallBound("det_combined ensemble runs in ONE exchange + ONE sort (single-pass plan)") {
+    detCombinedPlan(exchanges = 1)
+  }
+
+  test("det_combined below the small-input bound runs in ONE partition: NO exchange, ONE sort") {
+    detCombinedPlan(exchanges = 0)
+  }
+
+  /** Hampel, rolling-std and a 3-member ensemble over a persisted
+    * 400-row frame: `exchanges` Exchange nodes, ONE sort, one window
+    * operator per single detector, no sliding aggregate frame.
+    */
+  private def persistedFramePlans(exchanges: Int): Unit = {
     import org.apache.spark.sql.catalyst.expressions.{RowFrame, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression}
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
     import org.apache.spark.sql.execution.{SortExec, SparkPlan}
@@ -57,11 +74,11 @@ class PlanShapeSpec extends SparkSpecBase {
             RangeDetector(-0.9, 0.9), DiffDetector(1.5), HampelDetector(5, 3.0))))) {
         val df = det.detect(frame, spec)
         val plan = nodes(df.queryExecution.executedPlan)
-        val exchanges = plan.count(_.isInstanceOf[Exchange])
+        val got = plan.count(_.isInstanceOf[Exchange])
         val sorts = plan.count(_.isInstanceOf[SortExec])
         val windows = plan.count(_.isInstanceOf[WindowExec])
-        assert(exchanges == 1 && sorts == 1 && (name == "ensemble" || windows == 1),
-          s"$name: $exchanges exchange(s), $sorts sort(s), $windows window(s):\n" +
+        assert(got == exchanges && sorts == 1 && (name == "ensemble" || windows == 1),
+          s"$name: $got exchange(s), $sorts sort(s), $windows window(s):\n" +
             df.queryExecution.executedPlan)
         val sliding = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
           case WindowExpression(_: AggregateExpression, s) => s.frameSpecification
@@ -69,6 +86,14 @@ class PlanShapeSpec extends SparkSpecBase {
         assert(sliding.isEmpty, s"$name aggregates over sliding frame(s) $sliding")
       }
     } finally frame.unpersist(blocking = true)
+  }
+
+  testAboveSmallBound("Hampel, rolling-std and a 3-member ensemble over a persisted frame: ONE exchange + ONE sort, no sliding aggregate frame") {
+    persistedFramePlans(exchanges = 1)
+  }
+
+  test("Hampel, rolling-std and a 3-member ensemble over a small persisted frame: NO exchange, ONE sort, one window per single detector") {
+    persistedFramePlans(exchanges = 0)
   }
 
   test("projection-only pipeline queries carry ZERO exchanges (p49/p84/p89/p92/p95)") {

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** ChunkedDetect must reproduce the unchunked masks BIT-IDENTICALLY for
   * every row-bounded detector, across chunk-boundary frames, positional
   * edge rules, thin head/tail chunks, and series that fail validation
-  * (thin interior chunks, gaps) and stay unchunked.
+  * (thin interior chunks, gaps) and stay unchunked. These run above the
+  * small-input bound ([[SparkSpecBase.aboveSmallBound]]): a smaller
+  * frame skips chunking altogether, as the last test pins.
   */
 class ChunkedDetectSpec extends SparkSpecBase {
 
@@ -29,7 +31,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     "combined" -> CombinedDetector(Seq(
       ConstantValueDetector(), RangeDetector(maxValue = 2.0), HampelDetector(5, 3))))
 
-  test("chunked masks are bit-identical to unchunked on every golden series") {
+  testAboveSmallBound("chunked masks are bit-identical to unchunked on every golden series") {
     val spec = SeriesSpec()
     for ((sName, g) <- golden; bucketHours <- Seq(3, 24, 500)) {
       val df = seriesDf(g).cache()
@@ -43,7 +45,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     }
   }
 
-  test("multi-series chunked run matches per-series unchunked masks") {
+  testAboveSmallBound("multi-series chunked run matches per-series unchunked masks") {
     val spec = SeriesSpec(seriesId = Seq("sid"))
     val stacked = stackedDf(Seq(golden("walk"), golden("irregular"))).cache()
     for ((dName, det) <- Seq("hampel_w5", "cgrad_w3", "diff").map(n => n -> dets(n))) {
@@ -57,7 +59,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     stacked.unpersist()
   }
 
-  test("thin interior chunks trigger the exact fallback (gap-heavy series)") {
+  testAboveSmallBound("thin interior chunks trigger the exact fallback (gap-heavy series)") {
     // 40 hourly rows, then a 10-day gap, then ONE row, another gap, 40
     // more: with a 6h bucket the lone row is a thin interior chunk for
     // hampel_w5 (m=5) — the series must stay unchunked and still be exact
@@ -75,7 +77,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     }
   }
 
-  test("minRowsToChunk splits hot from cold; masks identical either way") {
+  testAboveSmallBound("minRowsToChunk splits hot from cold; masks identical either way") {
     val spec = SeriesSpec(seriesId = Seq("sid"))
     val stacked = stackedDf(Seq(golden("walk"), golden("quant_train"))).cache()
     for ((dName, det) <- Seq("hampel_w5", "diff").map(n => n -> dets(n))) {
@@ -98,7 +100,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     stacked.unpersist()
   }
 
-  test("one call mixes chunked hot, gap-failing hot and cold series") {
+  testAboveSmallBound("one call mixes chunked hot, gap-failing hot and cold series") {
     // quant_train (1000 hourly rows) is hot and chunkable; its copy with
     // a 30-day gap after row 500 is just as hot but breaks the bucket
     // relay; walk and irregular (120 rows each) are cold. The gap series
@@ -131,7 +133,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     stacked.unpersist()
   }
 
-  test("unbounded-context detectors (EWMA) pass through unchunked") {
+  testAboveSmallBound("unbounded-context detectors (EWMA) pass through unchunked") {
     assert(EwmaDetector(0.3, 3.0).contextRows == -1)
     val g = golden("walk")
     val df = seriesDf(g)
@@ -141,7 +143,7 @@ class ChunkedDetectSpec extends SparkSpecBase {
     assert(got == want)
   }
 
-  test("chunked plan partitions windows by (series, chunk), not by series alone") {
+  testAboveSmallBound("chunked plan partitions windows by (series, chunk), not by series alone") {
     val stacked = stackedDf(Seq(golden("walk"), golden("quant_train")))
     // hourly series, 24h buckets, 12h margins: validation passes for
     // m=5, so both series are chunked
@@ -155,5 +157,27 @@ class ChunkedDetectSpec extends SparkSpecBase {
     assert(windowLines.nonEmpty)
     assert(windowLines.forall(_.contains("__chunk")),
       s"detector window lost the chunk key:\n${windowLines.mkString("\n")}")
+  }
+
+  test("a small frame is not chunked: the plan is the one-partition window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val stacked = stackedDf(Seq(golden("walk"), golden("quant_train"))).cache()
+    stacked.count()
+    try {
+      assert(TsOps.small(stacked))
+      val spec = SeriesSpec(seriesId = Seq("sid"))
+      val out = ChunkedDetect.detect(HampelDetector(5, 3), stacked, spec,
+        24 * 3600L, 12 * 3600L)
+      val plan = out.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(plan.collect { case e: Exchange => e }.isEmpty && !plan.toString.contains("__chunk"),
+        s"want the unchunked window with no exchange:\n$plan")
+      for (s <- Seq("walk", "quant_train"))
+        assert(maskOf(out.filter(col("sid") === s)) ==
+          maskOf(HampelDetector(5, 3).detect(stacked.filter(col("sid") === s), spec)), s)
+    } finally stacked.unpersist()
   }
 }

@@ -1,5 +1,6 @@
 package graft.ts
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-series fit must equal running the reference's global fit
@@ -11,7 +12,7 @@ class PerSeriesFitSpec extends SparkSpecBase {
   lazy val stacked = stackedDf(names.map(loadGolden)).cache()
   val spec = SeriesSpec(seriesId = Seq("sid"))
 
-  def perSeriesMask(out: org.apache.spark.sql.DataFrame, s: String): Vector[Boolean] =
+  def perSeriesMask(out: DataFrame, s: String): Vector[Boolean] =
     maskOf(out.filter(col("sid") === s))
 
   test("per-series range fit == per-series global RangeDetector fits") {
@@ -59,6 +60,30 @@ class PerSeriesFitSpec extends SparkSpecBase {
       val singleTrain = single.filter(col("value") < 5 || col("value").isNull)
       val want = maskOf(RangeDetector().fit(singleTrain).detect(single))
       assert(perSeriesMask(joint, n) == want, n)
+    }
+  }
+
+  test("a null series id is a series of its own: its rows meet its own fit") {
+    // walk under a null id beside a named series; thresholds from the
+    // first 60 hours, scored over everything
+    val cut = java.sql.Timestamp.valueOf("2020-01-03 12:00:00")
+    val parts = Seq("walk", "jump_normal")
+    val df = stackedDf(parts.map(loadGolden)).withColumn("sid",
+      when(col("sid") =!= "walk", col("sid")))
+    val train = df.filter(col("ts") < cut)
+    val fits: Seq[(String, DataFrame => DataFrame, Detector)] = Seq(
+      ("range", PerSeriesFit.rangeDetect(train, _, spec = spec), RangeDetector()),
+      ("diff", PerSeriesFit.diffDetect(train, _, spec = spec), DiffDetector()),
+      ("rolling_std", PerSeriesFit.rollingStdDetect(train, _, windowSize = 4, spec = spec),
+        RollingStdDevDetector(4)),
+      ("gradient", PerSeriesFit.gradientDetect(train, _, spec = spec), GradientDetector()))
+    for ((name, perSeries, det) <- fits; n <- parts) {
+      val single = seriesDf(loadGolden(n))
+      val want = maskOf(det.fit(single.filter(col("ts") < cut)).detect(single))
+      val out = perSeries(df)
+      val got = maskOf(out.filter(if (n == "walk") col("sid").isNull else col("sid") === n))
+      assert(got == want, s"$name on $n")
+      if (n == "walk") assert(want.contains(true), s"$name flags nothing on the null-id series")
     }
   }
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.scalactic.source.Position
 import org.scalatest.funsuite.AnyFunSuite
 import scala.io.Source
 
@@ -20,6 +21,22 @@ trait SparkSpecBase extends AnyFunSuite {
   def assumeReferenceFile(path: String): Unit =
     assume(Files.isRegularFile(Paths.get(path)),
       s"$path absent (reference checkout not on this host)")
+
+  /** Runs `body` with every detector input above the small-input bound
+    * ([[TsOps.small]]): AQE's minimum partition size is pinned at one
+    * byte while it runs, then restored. Test-sized frames then take the
+    * plans large inputs take: an exchange by series under each window.
+    */
+  def aboveSmallBound[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val size = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try body finally spark.conf.set(key, size)
+  }
+
+  /** A test whose body runs [[aboveSmallBound]]. */
+  def testAboveSmallBound(name: String)(body: => Any)(implicit pos: Position): Unit =
+    test(name)(aboveSmallBound(body))(pos)
 
   /** Golden CSV → (header mask names, rows). value empty string = null. */
   def loadGolden(name: String): GoldenSeries = {
